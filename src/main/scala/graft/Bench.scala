@@ -105,6 +105,11 @@ object Bench {
 
   private def jarr(xs: Seq[String]) = xs.map("\"" + _ + "\"").mkString("[", ",", "]")
 
+  /** Codegen compiles per timed pass (index = pass - 1), summed from the
+    * per-query counts; bench_out.json carries them.
+    */
+  @volatile private var passCompiles = Vector.empty[Long]
+
   /** The COMPLETE small summary line — everything the driver's gate
     * needs in well under the harness's 2000-char stdout tail.
     * "failures" = queries attempted at least once with zero successful
@@ -139,7 +144,7 @@ object Bench {
           // reconcile the per-query mins with the true total.
           val ab = graft.warehouse.Materialized.buildSecondsByKey.toSeq.sortBy(_._1)
             .map { case (k, v) => "\"" + k + "\":" + d3(v) }.mkString("{", ",", "}")
-          s""","failed":${jarr(failedNames)},"skipped":${jarr(skippedNames)},"single_pass":${jarr(singleNames)},"artifact_build_sec":${d3(graft.warehouse.Materialized.buildSecondsTotal)},"artifact_build":$ab"""
+          s""","failed":${jarr(failedNames)},"skipped":${jarr(skippedNames)},"single_pass":${jarr(singleNames)},"artifact_build_sec":${d3(graft.warehouse.Materialized.buildSecondsTotal)},"artifact_build":$ab,"codegen_compiles_by_pass":${passCompiles.mkString("[", ",", "]")}"""
         } else ""
         val total = d3(keyed.map(_._2.best).filter(_ >= 0).sum)
         val failures = keyed.count { case (_, s) => s.attempts > 0 && s.passes == 0 }
@@ -190,11 +195,8 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
+    val spark = graft.core.GraftSession
+      .builder(master = s"local[$cpus]", shufflePartitions = cpus.toInt, appName = "graft-bench")
       // Survive long GC pauses in a loaded harness: a missed heartbeat
       // must degrade a timing, not kill the executor (local mode = the
       // whole JVM). 60s interval x 20 failures = 20 min of grace.
@@ -203,7 +205,6 @@ object Bench {
       .config("spark.network.timeout", "1200s")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    graft.core.GraftSession.tune(spark)
 
     // SPARK_GRAFT_ONLY=q95_contamination,q96_... subsets the run — the
     // fast dev loop for profiling a single query under bench conditions.
@@ -270,19 +271,23 @@ object Bench {
     while (continue && pass < TimedPasses) {
       pass += 1
       val passT0 = elapsedGlobal
+      passCompiles :+= 0L
       for (name <- names) {
         if (elapsedGlobal < GlobalBudgetSec) {
           val st = byName(name)
           st.attempts += 1
           inFlight = name
+          val compiles0 = graft.core.GraftSession.codegenCompiles
           val s = run(name, s"timed$pass")
+          val compiles = graft.core.GraftSession.codegenCompiles - compiles0
           inFlight = null
+          passCompiles = passCompiles.updated(pass - 1, passCompiles(pass - 1) + compiles)
           maybeClearCache(spark)
           if (s >= 0) {
             st.best = if (st.best < 0) s else math.min(st.best, s)
             st.passes += 1
           }
-          System.err.println(f"[bench] timed$pass $name%-24s ${s}%.2fs (t+${elapsedGlobal}%.0fs)")
+          System.err.println(f"[bench] timed$pass $name%-24s ${s}%.2fs (t+${elapsedGlobal}%.0fs) compiles=$compiles")
         } else if (byName(name).attempts > 0) {
           // already has at least one attempt — nothing to record
         } else {

@@ -2,8 +2,6 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 /** Optimization-round tooling: writes `.explain("formatted")` for the
   * named queries (or the whole board) to text files, so plan-shape
   * claims in OPTIMIZATION_r*.md are checkable without running Spark.
@@ -20,15 +18,10 @@ object PlanDump {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val suffix = sys.env.getOrElse("SPARK_GRAFT_PLAN_SUFFIX", "before")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+    val spark = graft.core.GraftSession
+      .builder(master = s"local[$cpus]", shufflePartitions = cpus.toInt, appName = "graft-plandump")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    graft.core.GraftSession.tune(spark)
     Files.createDirectories(Paths.get(outDir))
     val names = SparkEntry.queries.keys.toSeq
       .sortBy(n => (Verify.queryNumber(n), n))

@@ -228,14 +228,10 @@ object StressBench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
+    val spark = core.GraftSession
+      .builder(master = s"local[$cpus]", shufflePartitions = cpus.toInt, appName = "graft-stress")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    core.GraftSession.tune(spark)
 
     val synthDir = "target/stress_x10"
     synthesize(spark, sfDir, synthDir, copies = 10)

@@ -3,8 +3,6 @@ package graft
 import java.nio.file.{Files, Paths, StandardCopyOption}
 import java.util.concurrent.{ConcurrentLinkedQueue, Executors, FutureTask, TimeUnit, TimeoutException}
 
-import org.apache.spark.sql.SparkSession
-
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare.
   *
@@ -96,18 +94,13 @@ object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+    val spark = graft.core.GraftSession
+      .builder(master = s"local[$cpus]", shufflePartitions = cpus.toInt, appName = "graft-verify")
       // concurrent dumps share the cores fairly instead of FIFO
       // head-of-line blocking behind one heavy plan
       .config("spark.scheduler.mode", if (FairScheduling) "FAIR" else "FIFO")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    graft.core.GraftSession.tune(spark)
     new java.io.File(outDir).mkdirs()
 
     val oracle = selected(SparkEntry.oracleSql)

@@ -1014,17 +1014,25 @@ object Similarity {
 
   /** PQ encoding of the corpus: per vector the [[PqM]] code ids (as a
     * comma string, the array-output convention) and the reconstruction
-    * error — the sum of per-subspace quantization distances, an exact
-    * decimal sum so partitioning cannot reorder float addition.
+    * error — the per-subspace quantization distances folded as doubles
+    * in subspace (`m`) order, so partitioning cannot reorder the
+    * addition and the oracle replays the same fold. No per-row decimal
+    * cast: Spark rounds a double's shortest decimal string, DuckDB its
+    * exact binary value, so the two disagree on values such as
+    * 0.0163183249065 (binary 0.016318324906499998...).
     */
   def pqEncode(emb: DataFrame, codebooks: Option[DataFrame] = None): DataFrame =
-    pqEncodedLong(emb, codebooks.getOrElse(pqCodebooks(emb)))
-      .groupBy("vec_id")
-      .agg(
-        concat_ws(",", transform(
-          array_sort(collect_list(struct(col("m"), col("code")))),
-          x => x.getField("code").cast("string"))).as("codes"),
-        sum(col("d2").cast("decimal(38,12)")).cast("double").as("recon_err"))
+    pqSummary(pqEncodedLong(emb, codebooks.getOrElse(pqCodebooks(emb))))
+
+  /** (vec_id, m, code, d2) rows → one (vec_id, codes, recon_err) row per
+    * vector, both in `m` order.
+    */
+  private[graft] def pqSummary(long: DataFrame): DataFrame =
+    long.groupBy("vec_id")
+      .agg(array_sort(collect_list(struct(col("m"), col("code"), col("d2")))).as("per_m"))
+      .select(col("vec_id"),
+        concat_ws(",", transform(col("per_m"), x => x.getField("code").cast("string"))).as("codes"),
+        aggregate(col("per_m"), lit(0d), (acc, x) => acc + x.getField("d2")).as("recon_err"))
       .orderBy("vec_id")
 
   /** Exact squared-L2 top-k for a small broadcast query set — the
@@ -1559,7 +1567,7 @@ object Similarity {
       s"""WITH ${pqCodebookCtes()},
          |${pqEncCtes()}
          |SELECT vec_id, string_agg(CAST(code AS VARCHAR), ',' ORDER BY m) AS codes,
-         |  CAST(SUM(CAST(d2 AS DECIMAL(38,12))) AS DOUBLE) AS recon_err
+         |  list_reduce(list_prepend(CAST(0 AS DOUBLE), list(d2 ORDER BY m)), (a, b) -> a + b) AS recon_err
          |FROM enc GROUP BY vec_id ORDER BY vec_id""".stripMargin
 
     /** CTE chain ending in `${p}cent(cent_id, cemb)` — the generic

@@ -2,6 +2,8 @@ package org.apache.spark.sql.classic
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.catalyst.rules.Rule
 
 /** Access bridge to the sql-private Column <-> Expression converters —
   * the standard pattern for libraries that ship custom Catalyst
@@ -20,4 +22,13 @@ object GraftBridge {
   def scalarSubquery(df: org.apache.spark.sql.Dataset[_]): Column =
     column(org.apache.spark.sql.catalyst.expressions.ScalarSubquery(
       df.queryExecution.analyzed))
+
+  /** The optimizer rules the session's extensions injected (empty for a
+    * session built without extensions).
+    */
+  def injectedOptimizerRules(spark: org.apache.spark.sql.SparkSession): Seq[Rule[LogicalPlan]] =
+    spark match {
+      case s: SparkSession => s.extensions.buildOptimizerRules(s)
+      case _ => Nil
+    }
 }

@@ -86,6 +86,27 @@ class PqSpec extends AnyFunSuite with TestSpark {
     }
   }
 
+  test("pq recon_err is the m-ordered double fold, not a per-row decimal sum") {
+    // m = 6 of vec 123 on a seeded curation corpus: its binary value is
+    // 0.016318324906499998..., so casting it to decimal(38,12) rounds
+    // the engines apart — Spark rounds the shortest decimal string
+    // (...907), DuckDB the exact binary value (...906)
+    val d2Seed = 0.0163183249065
+    val cast = Seq(d2Seed).toDF("d2").select(col("d2").cast("decimal(38,12)")).head().getDecimal(0)
+    assert(cast.compareTo(new java.math.BigDecimal("0.016318324907")) == 0)
+    assert(new java.math.BigDecimal(d2Seed).setScale(12, java.math.RoundingMode.HALF_UP)
+      .compareTo(new java.math.BigDecimal("0.016318324906")) == 0)
+    val perM = Seq(0.01, 0.01919, 0.01838, 0.01757, 0.01676, 0.01595, d2Seed, 0.01433,
+      0.01352, 0.01271, 0.0119, 0.01109, 0.01028, 0.01947, 0.01866, 0.01785)
+    val inOrder = perM.foldLeft(0d)(_ + _)
+    // the values are chosen so the fold order shows in the last bit
+    assert(inOrder != perM.reverse.foldLeft(0d)(_ + _))
+    val rows = perM.zipWithIndex.map { case (d2, m) => (123L, m, (m * 5) % 16, d2) }.reverse
+    val got = Similarity.pqSummary(rows.toDF("vec_id", "m", "code", "d2").repartition(7)).head()
+    assert(got.getString(1) == perM.indices.map(m => (m * 5) % 16).mkString(","))
+    assert(got.getDouble(2) == inOrder)
+  }
+
   test("ivfPqTopK: partitioning-invariant, dense monotone ranks") {
     val k = 4
     def run(parts: Int) =
