@@ -3,13 +3,14 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.core.GraftSession
-import graft.warehouse.{AnalyticsQueries, ExtendedQueries, IotQueries, PipelineQueries, RelationalQueries}
+import graft.warehouse.{AnalyticsQueries, Entry, ExtendedQueries, IotQueries, PipelineQueries, RelationalQueries}
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
+/** Driver contract — see SURVEY.md §7.
   *
-  * `queries` aggregates one entry per implemented operator from
-  * SURVEY.md §2 (plus the LLM-pipeline extensions); `oracleSql` carries
-  * the DuckDB-equivalent SQL for the driver's hash-compare.
+  * `all` holds one [[Entry]] per implemented operator from SURVEY.md §2
+  * (plus the LLM-pipeline extensions); `queries` and `oracleSql` are its
+  * two views, the Spark builders and the DuckDB-equivalent SQL for the
+  * driver's hash-compare.
   */
 object SparkEntry {
 
@@ -19,15 +20,17 @@ object SparkEntry {
     RelationalQueries.leaderboard(spark, "/root/testdata/sf0.001")
   }
 
-  /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
-    RelationalQueries.queries ++ ExtendedQueries.queries ++ IotQueries.queries ++
-      PipelineQueries.queries ++ AnalyticsQueries.queries
+  val all: Seq[Entry] =
+    RelationalQueries.entries ++ ExtendedQueries.entries ++ IotQueries.entries ++
+      PipelineQueries.entries ++ AnalyticsQueries.entries
 
-  /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omit for non-SQL-expressible ops.
-    */
-  def oracleSql: Map[String, String] =
-    RelationalQueries.oracle ++ ExtendedQueries.oracle ++ IotQueries.oracle ++
-      PipelineQueries.oracle ++ AnalyticsQueries.oracle
+  locally {
+    val dups = all.groupBy(_.name).collect { case (n, es) if es.size > 1 => n }
+    require(dups.isEmpty, s"query names registered twice: ${dups.toSeq.sorted.mkString(", ")}")
+  }
+
+  val queries: Map[String, (SparkSession, String) => DataFrame] =
+    all.map(e => e.name -> e.build).toMap
+
+  val oracleSql: Map[String, String] = all.map(e => e.name -> e.oracleSql).toMap
 }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.functions.{Hashes, Num, Vec}
+import graft.warehouse.Materialized
 
 /** Distributed embedding clustering: element-wise centroid aggregation
   * and Lloyd's k-means over DataFrames — the missing piece between the
@@ -147,7 +148,7 @@ object Clustering {
     for (_ <- 1 to iters) {
       val prev = centroids
       centroids = stepFn(train, centroids).localCheckpoint(true)
-      prev.unpersist()
+      Materialized.release(prev)
     }
     train.unpersist()
     centroids

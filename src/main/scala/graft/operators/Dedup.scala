@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.{Hashes, Text}
+import graft.warehouse.Materialized
 
 /** Deduplication family for LLM-data pipelines: exact, MinHash+LSH,
   * SimHash, and n-gram Jaccard.
@@ -548,6 +549,7 @@ object Dedup {
       .withColumn("lbl", col("doc"))
       .repartition(p, col("doc"))
       .localCheckpoint(true)
+    var held = labels
     var iter = 0
     var changed = 1L
     while (changed > 0 && iter < maxIters) {
@@ -571,9 +573,11 @@ object Dedup {
         .repartition(p, col("doc"))
         .localCheckpoint(true)
       changed = updated.filter(col("lbl") =!= col("old_lbl")).count()
-      val prev = labels
+      // `labels` projects the previous round's checkpoint, which only
+      // the frame itself owns: release that, not the projection
+      Materialized.release(held)
+      held = updated
       labels = updated.select("doc", "lbl")
-      prev.unpersist()
       iter += 1
     }
     if (changed > 0)

@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.warehouse.Materialized
+
 /** Graph analytics over edge lists — the quality-signal family for
   * web-scale pretraining corpora (PageRank-style centrality is the
   * canonical page-quality weight for crawl data, and the same iterative
@@ -62,10 +64,11 @@ object Graph {
       val prev = r
       r = step(withDeg, nodes, prev, dampingNum, dampingDen, teleportMicro)
         .localCheckpoint(true)
-      // superseded iterations are dead weight in executor storage: drop
-      // them as the loop advances (the round-2 CC lesson) instead of
-      // waiting for a driver GC to trigger ContextCleaner
-      prev.unpersist()
+      // superseded iterations are dead weight in executor storage: free
+      // their checkpoint blocks as the loop advances (Dataset.unpersist
+      // would not touch them) instead of waiting for a driver GC to
+      // trigger ContextCleaner
+      Materialized.release(prev)
     }
     r.join(deg.select(col("src").as("id"), col("deg")), Seq("id"), "left")
       .select(col("id"), coalesce(col("deg"), lit(0L)).as("out_degree"),
@@ -122,7 +125,7 @@ object Graph {
           (col("tpt") +
             expr(s"(${dampingNum}L * coalesce(s, 0L)) div ${dampingDen}L")).as("m"))
         .localCheckpoint(true)
-      prev.unpersist()
+      Materialized.release(prev)
     }
     r.join(tele.select("id", "is_seed"), "id")
       .join(deg.select(col("src").as("id"), col("deg")), Seq("id"), "left")
@@ -170,7 +173,7 @@ object Graph {
     val maxDeg = e.select(col("src").as("id"))
       .union(e.select(col("dst").as("id")))
       .groupBy("id").agg(count(lit(1)).as("deg"))
-      .agg(max(col("deg"))).head().getLong(0)
+      .agg(coalesce(max(col("deg")), lit(0L))).head().getLong(0)
     require(maxDeg <= 9200000L,
       s"hits: max node degree $maxDeg exceeds the bigint micro-unit headroom " +
         "(deg * 10^6 * 10^6 must fit a BIGINT; cap per-node degree at 9.2e6 upstream)")
@@ -195,8 +198,8 @@ object Graph {
       h = normalized(
         e.join(a.select(col("id").as("dst"), col("a")), "dst")
           .groupBy(col("src").as("id")).agg(sum(col("a")).as("raw")), "h")
-      hPrev.unpersist()
-      if (aPrev != null) aPrev.unpersist()
+      Materialized.release(hPrev)
+      if (aPrev != null) Materialized.release(aPrev)
     }
     h.join(a, "id")
       .select(col("id"),
@@ -241,7 +244,7 @@ object Graph {
         .localCheckpoint(true)
       val nNext = next.count()
       converged = nNext == nAlive
-      alive.unpersist()
+      Materialized.release(alive)
       alive = next
       nAlive = nNext
     }
@@ -294,7 +297,7 @@ object Graph {
         .select(col("id"),
           when(col("is_seed"), col("seed_label")).otherwise(col("maj")).as("lbl"))
         .localCheckpoint(true)
-      prev.unpersist()
+      Materialized.release(prev)
     }
     nodes.select(col("id"), col("is_seed")).join(lbl, "id")
       .select(col("id"), col("is_seed"), col("lbl").as("pred_label"))
@@ -336,7 +339,7 @@ object Graph {
         .select(col("id"),
           when(col("is_seed"), col("seed_label")).otherwise(col("maj")).as("lbl"))
         .localCheckpoint(true)
-      prev.unpersist()
+      Materialized.release(prev)
     }
     nodes.select(col("id"), col("is_seed")).join(lbl, "id")
       .select(col("id"), col("is_seed"), col("lbl").as("pred_label"))

@@ -7,6 +7,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.{Hashes, Vec}
+import graft.warehouse.Materialized
 
 /** Approximate-nearest-neighbor search over an embedding column
   * (ArrayType(FloatType)).
@@ -983,7 +984,7 @@ object Similarity {
           array((1 to PqSubDim).map(i =>
             (col(s"s_$i").cast("double") / col("n").cast("double")).cast("float")): _*).as("cemb"))
         .localCheckpoint(true)
-      prev.unpersist()
+      Materialized.release(prev)
     }
     val w = Window.partitionBy("m").orderBy("cluster_id")
     cents.select(col("m"), (row_number().over(w) - 1).as("code"), col("cemb"))

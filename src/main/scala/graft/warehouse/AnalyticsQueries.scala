@@ -1026,55 +1026,6 @@ object AnalyticsQueries {
     cohortSemiRevenue(probed, supp)
   }
 
-  val queries: Map[String, Q] = Map(
-    "q249_semi_plain" -> semiShufflePlain,
-    "q250_semi_bloom" -> semiShuffleBloom,
-    "q240_bloom_filter" -> bloomSemiJoin,
-    "q112_reaggregation" -> reaggregation,
-    "q106_regr_stats" -> regrStats,
-    "q107_ntile_bins" -> ntileBins,
-    "q108_attribution" -> attribution,
-    "q93_topk_agg" -> topKAgg,
-    "q90_cdc_snapshot" -> cdcSnapshot,
-    "q91_winsorized" -> winsorized,
-    "q92_mad_outliers" -> madOutliers,
-    "q203_exact_quantiles" -> exactQuantiles,
-    "q209_log_quantiles" -> logQuantiles,
-    "q81_dim_time" -> dimTimeCalendar,
-    "q54_pivot" -> pivot,
-    "q55_cube" -> cube,
-    "q56_rank_suite" -> rankSuite,
-    "q57_time_weighted_avg" -> timeWeightedAvg,
-    "q58_range_join" -> rangeJoin,
-    "q59_gap_fill" -> gapFill,
-    "q60_skew_salted" -> skewSalted,
-    "q118_salted_join" -> skewSaltedJoin,
-    "q122_hist_quantile" -> histQuantile,
-    "q127_out_of_order" -> outOfOrder,
-    "q128_psi_drift" -> psiDrift,
-    "q61_unpivot" -> unpivot,
-    "q62_hourly_approx" -> hourlyApprox,
-    "q63_approx_distinct" -> approxDistinct,
-    "q71_hll_sketch" -> hllDistinct,
-    "q196_kmv_distinct" -> kmvDistinct,
-    "q197_kmv_overlap" -> kmvOverlap,
-    "q205_kmv_growth" -> kmvGrowth,
-    "q213_quantile_growth" -> logQuantileGrowth,
-    "q218_sketch_mad" -> sketchMad,
-    "q220_quantile_regression" -> quantileRegression,
-    "q223_band_auto_join" -> bandAutoJoin,
-    "q227_conformal_interval" -> conformalInterval,
-    "q190_join_size_sketch" -> joinSizeSketch,
-    "q193_theil_sen" -> theilSen,
-    "q73_zorder_key" -> zorderKey,
-    "q74_trailing_distinct" -> trailingDistinct,
-    "q75_cohort_retention" -> cohortRetention,
-    "q76_funnel" -> funnel,
-    "q77_histogram" -> histogram,
-    "q78_scd2_intervals" -> scd2Intervals,
-    "q208_band_overlap" -> bandOverlap,
-    "q214_band_concurrency" -> bandConcurrency)
-
   import Num.{O => N}
 
   /** Oracle twin of [[bigramSketches]]: (g = source, h) rows of each
@@ -1100,14 +1051,14 @@ object AnalyticsQueries {
        |              WHERE s_acctbal > $CohortBalanceFloor AND s_suppkey = l_suppkey)
        |GROUP BY 1 ORDER BY 1""".stripMargin
 
-  val oracle: Map[String, String] = Map(
-    "q249_semi_plain" -> cohortSemiOracle,
-    "q250_semi_bloom" -> cohortSemiOracle,
+  val entries: Seq[Entry] = Seq(
+    Entry("q249_semi_plain", semiShufflePlain, cohortSemiOracle),
+    Entry("q250_semi_bloom", semiShuffleBloom, cohortSemiOracle),
     // replays the exact bloom bit pattern as a DISTINCT position set
     // (generated beside the sketch: BloomSketch.oraclePosCte) and each
     // probe as K position lookups — bool_and over the probe rows is the
     // all-bits-set test the Spark side computes by shift/mask
-    "q240_bloom_filter" -> {
+    Entry("q240_bloom_filter", bloomSemiJoin, {
       import graft.functions.expressions.BloomSketch
       val h = graft.functions.Hashes.O.md5Long60("CAST(c_custkey AS VARCHAR)")
       s"""WITH hot AS (SELECT o_custkey FROM orders WHERE o_totalprice > $BloomPriceFloor),
@@ -1127,18 +1078,18 @@ object AnalyticsQueries {
          |FROM mb LEFT JOIN ac ON mb.c_custkey = ac.o_custkey
          |JOIN nation ON n_nationkey = c_nationkey
          |GROUP BY n_name ORDER BY n_name""".stripMargin
-    },
+    }),
     // deliberately aggregates the RAW stream in one step — equality with
     // the Spark side's daily→monthly two-step IS the re-aggregation proof
-    "q112_reaggregation" ->
+    Entry("q112_reaggregation", reaggregation,
       s"""${cte}SELECT device_type,
          |  CAST(date_trunc('month', CAST(time AS DATE)) AS DATE) AS month,
          |  COUNT(*) AS n_events,
          |  ${N.sum("value")} AS total_value,
          |  (${N.sum("value")} / COUNT(*)) AS avg_value
          |FROM readings
-         |GROUP BY 1, 2 ORDER BY device_type, month""".stripMargin,
-    "q106_regr_stats" ->
+         |GROUP BY 1, 2 ORDER BY device_type, month""".stripMargin),
+    Entry("q106_regr_stats", regrStats,
       s"""WITH g AS (
          |  SELECT l_returnflag, CAST(COUNT(*) AS DOUBLE) AS n,
          |    ${N.sum("l_quantity")} AS sx, ${N.sum("l_extendedprice")} AS sy,
@@ -1150,15 +1101,15 @@ object AnalyticsQueries {
          |  round(${N.fitSlope()}, 6) AS slope,
          |  round(${N.fitIntercept()}, 6) AS intercept,
          |  round(${N.fitCorr()}, 6) AS corr
-         |FROM g ORDER BY l_returnflag""".stripMargin,
-    "q107_ntile_bins" ->
+         |FROM g ORDER BY l_returnflag""".stripMargin),
+    Entry("q107_ntile_bins", ntileBins,
       """SELECT source, CAST(bin AS INT) AS bin, COUNT(*) AS n_docs,
         |  min(n_chars) AS min_chars, max(n_chars) AS max_chars
         |FROM (SELECT source, n_chars,
         |        ntile(10) OVER (PARTITION BY source ORDER BY n_chars, doc_id) AS bin
         |      FROM documents)
-        |GROUP BY source, bin ORDER BY source, bin""".stripMargin,
-    "q108_attribution" ->
+        |GROUP BY source, bin ORDER BY source, bin""".stripMargin),
+    Entry("q108_attribution", attribution,
       """SELECT user_id, COUNT(*) AS n_events,
         |  max(CASE WHEN rn_first = 1 THEN event_type END) AS first_touch,
         |  max(CASE WHEN rn_last = 1 THEN event_type END) AS last_touch,
@@ -1167,21 +1118,21 @@ object AnalyticsQueries {
         |        row_number() OVER (PARTITION BY user_id ORDER BY ts, event_id) AS rn_first,
         |        row_number() OVER (PARTITION BY user_id ORDER BY ts DESC, event_id DESC) AS rn_last
         |      FROM events)
-        |GROUP BY user_id ORDER BY user_id""".stripMargin,
-    "q93_topk_agg" ->
+        |GROUP BY user_id ORDER BY user_id""".stripMargin),
+    Entry("q93_topk_agg", topKAgg,
       s"""${cte}SELECT device_type, CAST(rank AS INT) AS rank, value, event_id FROM (
          |  SELECT device_type, value, event_id,
          |    row_number() OVER (PARTITION BY device_type ORDER BY value DESC, event_id ASC) AS rank
          |  FROM readings)
-         |WHERE rank <= 5 ORDER BY device_type, rank""".stripMargin,
-    "q90_cdc_snapshot" ->
+         |WHERE rank <= 5 ORDER BY device_type, rank""".stripMargin),
+    Entry("q90_cdc_snapshot", cdcSnapshot,
       """SELECT user_id, CAST(ts AS TIMESTAMP) AS ts, event_id, value FROM (
         |  SELECT user_id, ts, event_id, value,
         |    CASE WHEN event_type = 'error' THEN 'D' ELSE 'U' END AS op,
         |    row_number() OVER (PARTITION BY user_id ORDER BY ts DESC, event_id DESC) AS rn
         |  FROM events)
-        |WHERE rn = 1 AND op != 'D' ORDER BY user_id""".stripMargin,
-    "q91_winsorized" ->
+        |WHERE rn = 1 AND op != 'D' ORDER BY user_id""".stripMargin),
+    Entry("q91_winsorized", winsorized,
       s"""${cte.stripSuffix("\n").stripSuffix(")")}),
          |b AS (SELECT device_type, round(quantile_cont(value, 0.05), 6) AS lo,
          |             round(quantile_cont(value, 0.95), 6) AS hi
@@ -1190,8 +1141,8 @@ object AnalyticsQueries {
          |  ${N.avg("r.value")} AS raw_avg,
          |  ${N.avg("least(greatest(r.value, b.lo), b.hi)")} AS winsorized_avg
          |FROM readings r JOIN b USING (device_type)
-         |GROUP BY r.device_type, b.lo, b.hi ORDER BY device_type""".stripMargin,
-    "q92_mad_outliers" ->
+         |GROUP BY r.device_type, b.lo, b.hi ORDER BY device_type""".stripMargin),
+    Entry("q92_mad_outliers", madOutliers,
       s"""${cte.stripSuffix("\n").stripSuffix(")")}),
          |m AS (SELECT device_type, round(quantile_cont(value, 0.5), 6) AS med
          |      FROM readings GROUP BY 1),
@@ -1201,8 +1152,8 @@ object AnalyticsQueries {
          |SELECT d.device_type, COUNT(*) AS n, d.med AS med, md.mad AS mad,
          |  CAST(SUM(CASE WHEN d.adev > 3.0 * md.mad THEN 1 ELSE 0 END) AS BIGINT) AS n_outliers
          |FROM d JOIN md USING (device_type)
-         |GROUP BY d.device_type, d.med, md.mad ORDER BY device_type""".stripMargin,
-    "q81_dim_time" ->
+         |GROUP BY d.device_type, d.med, md.mad ORDER BY device_type""".stripMargin),
+    Entry("q81_dim_time", dimTimeCalendar,
       """WITH b AS (SELECT date_trunc('day', CAST(min(ts) AS TIMESTAMP)) AS d0,
         |                  date_trunc('day', CAST(max(ts) AS TIMESTAMP)) AS d1 FROM events),
         |g AS (SELECT d0, unnest(range(d0, d1 + INTERVAL 24 HOUR, INTERVAL 1 HOUR)) AS ts_hour FROM b),
@@ -1225,39 +1176,39 @@ object AnalyticsQueries {
         |      FROM events GROUP BY 1, 2)
         |SELECT d.*, COALESCE(h.n_events, 0) AS n_events
         |FROM d LEFT JOIN h USING ("date", hour)
-        |ORDER BY time_id""".stripMargin,
-    "q54_pivot" ->
+        |ORDER BY time_id""".stripMargin),
+    Entry("q54_pivot", pivot,
       s"""${cte}SELECT CAST(hour(time) AS INT) AS hour_of_day,
          |  ${DeviceTypes.map(pivotCol).mkString(",\n  ")}
-         |FROM readings GROUP BY 1 ORDER BY hour_of_day""".stripMargin,
-    "q61_unpivot" ->
+         |FROM readings GROUP BY 1 ORDER BY hour_of_day""".stripMargin),
+    Entry("q61_unpivot", unpivot,
       s"""${cte}SELECT CAST(hour(time) AS INT) AS hour_of_day, device_type,
          |  ${N.avg("value")} AS avg_value
-         |FROM readings GROUP BY 1, 2 ORDER BY hour_of_day, device_type""".stripMargin,
+         |FROM readings GROUP BY 1, 2 ORDER BY hour_of_day, device_type""".stripMargin),
     // TRUE-literal bounds contract (see hourlyApprox/approxDistinct
     // scaladoc): the oracle asserts the accuracy verdict, the engine
     // computes it — a red hash here IS an accuracy violation.
-    "q62_hourly_approx" ->
+    Entry("q62_hourly_approx", hourlyApprox,
       s"""${cte}SELECT date_trunc('hour', time) AS bucket, device_type,
          |  COUNT(*) AS reading_count,
          |  round(${N.avg("value")}, 6) AS avg_value,
          |  min(value) AS min_value, max(value) AS max_value,
          |  TRUE AS median_approx_ok, TRUE AS p95_approx_ok
-         |FROM readings GROUP BY 1, 2 ORDER BY bucket, device_type""".stripMargin,
-    "q63_approx_distinct" ->
+         |FROM readings GROUP BY 1, 2 ORDER BY bucket, device_type""".stripMargin),
+    Entry("q63_approx_distinct", approxDistinct,
       s"""${cte}SELECT device_type,
          |  COUNT(DISTINCT device_id) AS exact_devices, COUNT(*) AS n,
          |  TRUE AS approx_within_15pct
-         |FROM readings GROUP BY 1 ORDER BY device_type""".stripMargin,
-    "q55_cube" ->
+         |FROM readings GROUP BY 1 ORDER BY device_type""".stripMargin),
+    Entry("q55_cube", cube,
       s"""${cte.stripSuffix("\n").stripSuffix(")")}),
          |r AS (SELECT device_type, CAST(hour(time) AS INT) AS hour_of_day, value FROM readings)
          |SELECT device_type, hour_of_day, COUNT(*) AS n,
          |  ${N.sum("value")} AS sum_value,
          |  CAST(GROUPING(device_type, hour_of_day) AS BIGINT) AS gid
          |FROM r GROUP BY CUBE(device_type, hour_of_day)
-         |ORDER BY gid, device_type NULLS FIRST, hour_of_day NULLS FIRST""".stripMargin,
-    "q56_rank_suite" ->
+         |ORDER BY gid, device_type NULLS FIRST, hour_of_day NULLS FIRST""".stripMargin),
+    Entry("q56_rank_suite", rankSuite,
       s"""${cte.stripSuffix("\n").stripSuffix(")")}),
          |totals AS (SELECT device_type, device_id, ${N.sum("value")} AS total_value
          |           FROM readings GROUP BY 1, 2)
@@ -1270,8 +1221,8 @@ object AnalyticsQueries {
          |FROM totals
          |WINDOW wt AS (PARTITION BY device_type ORDER BY total_value DESC, device_id ASC),
          |       wv AS (PARTITION BY device_type ORDER BY total_value DESC)
-         |ORDER BY device_type, rn""".stripMargin,
-    "q57_time_weighted_avg" ->
+         |ORDER BY device_type, rn""".stripMargin),
+    Entry("q57_time_weighted_avg", timeWeightedAvg,
       s"""${cte.stripSuffix("\n").stripSuffix(")")}),
          |d AS (SELECT device_id, value,
          |        (lead(CAST(floor(epoch(time)) AS BIGINT)) OVER (PARTITION BY device_id ORDER BY time, event_id)
@@ -1279,15 +1230,15 @@ object AnalyticsQueries {
          |      FROM readings)
          |SELECT device_id, COUNT(dt) AS n_intervals, CAST(SUM(dt) AS BIGINT) AS total_seconds,
          |  (${N.sum("value * dt")} / SUM(dt)) AS twavg
-         |FROM d GROUP BY device_id ORDER BY device_id""".stripMargin,
-    "q58_range_join" ->
+         |FROM d GROUP BY device_id ORDER BY device_id""".stripMargin),
+    Entry("q58_range_join", rangeJoin,
       """SELECT a.user_id, a.event_id AS id1, b.event_id AS id2,
         |  (CAST(floor(epoch(b.ts)) AS BIGINT) - CAST(floor(epoch(a.ts)) AS BIGINT)) AS dt_seconds
         |FROM events a JOIN events b
         |  ON a.user_id = b.user_id AND a.event_id < b.event_id
         |  AND abs(CAST(floor(epoch(a.ts)) AS BIGINT) - CAST(floor(epoch(b.ts)) AS BIGINT)) <= 600
-        |ORDER BY id1, id2""".stripMargin,
-    "q59_gap_fill" ->
+        |ORDER BY id1, id2""".stripMargin),
+    Entry("q59_gap_fill", gapFill,
       s"""${cte.stripSuffix("\n").stripSuffix(")")}),
          |hourly AS (SELECT device_id, CAST(date_trunc('hour', time) AS TIMESTAMP) AS bucket,
          |             ${N.avg("value")} AS bucket_avg
@@ -1299,11 +1250,11 @@ object AnalyticsQueries {
          |SELECT device_id, bucket, (bucket_avg IS NULL) AS is_gap,
          |  last_value(bucket_avg IGNORE NULLS) OVER (PARTITION BY device_id ORDER BY bucket
          |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS value_filled
-         |FROM j ORDER BY device_id, bucket""".stripMargin,
-    "q71_hll_sketch" ->
+         |FROM j ORDER BY device_id, bucket""".stripMargin),
+    Entry("q71_hll_sketch", hllDistinct,
       (graft.functions.expressions.HllSketch.oracleSql("events", "user_id", "event_type") +
-        "\nORDER BY event_type"),
-    "q208_band_overlap" ->
+        "\nORDER BY event_type")),
+    Entry("q208_band_overlap", bandOverlap,
       s"""${cte.stripSuffix("\n").stripSuffix(")")}),
          |banded AS (SELECT device_id, event_id, time,
          |             CAST(floor(value / 100) AS BIGINT) AS band,
@@ -1325,8 +1276,8 @@ object AnalyticsQueries {
          |SELECT band, COUNT(*) AS n_pairs,
          |  CAST(SUM(overlap_seconds) AS BIGINT) AS total_overlap_seconds,
          |  MAX(overlap_seconds) AS max_overlap_seconds
-         |FROM p GROUP BY band ORDER BY band""".stripMargin,
-    "q214_band_concurrency" ->
+         |FROM p GROUP BY band ORDER BY band""".stripMargin),
+    Entry("q214_band_concurrency", bandConcurrency,
       s"""${cte.stripSuffix("\n").stripSuffix(")")}),
          |banded AS (SELECT device_id, event_id, time,
          |             CAST(floor(value / 100) AS BIGINT) AS band,
@@ -1354,8 +1305,8 @@ object AnalyticsQueries {
          |SELECT pk.band, COALESCE(pa.n_pairs, 0) AS n_pairs,
          |  COALESCE(pa.total_overlap_seconds, 0) AS total_overlap_seconds,
          |  pk.peak_concurrency
-         |FROM pk LEFT JOIN pa USING (band) ORDER BY pk.band""".stripMargin,
-    "q203_exact_quantiles" ->
+         |FROM pk LEFT JOIN pa USING (band) ORDER BY pk.band""".stripMargin),
+    Entry("q203_exact_quantiles", exactQuantiles,
       s"""${cte.stripSuffix("\n").stripSuffix(")")}),
          |g AS (SELECT device_type AS k, value AS v, COUNT(*) AS cnt FROM readings GROUP BY 1, 2),
          |c AS (SELECT k, v, cnt,
@@ -1374,14 +1325,14 @@ object AnalyticsQueries {
          |SELECT v1.k AS device_type, v1.pctl AS pctl, v1.n,
          |  round(v1.v1 + (v1.h - floor(v1.h)) * (v2.v2 - v1.v1), 6) AS value
          |FROM v1 JOIN v2 ON v1.k = v2.k AND v1.pctl = v2.pctl
-         |ORDER BY device_type, v1.pctl""".stripMargin,
-    "q196_kmv_distinct" ->
+         |ORDER BY device_type, v1.pctl""".stripMargin),
+    Entry("q196_kmv_distinct", kmvDistinct,
       s"""WITH $kmvCtes,
          |agg AS (SELECT g AS source, COUNT(*) AS n_kept, MAX(h) AS hk FROM sk GROUP BY 1)
          |SELECT source, n_kept, hk AS max_kept_hash,
          |  ${graft.functions.Sketch.O.kmvEstimate("n_kept", "hk", KmvK)} AS est_distinct
-         |FROM agg ORDER BY source""".stripMargin,
-    "q197_kmv_overlap" ->
+         |FROM agg ORDER BY source""".stripMargin),
+    Entry("q197_kmv_overlap", kmvOverlap,
       s"""WITH $kmvCtes,
          |pr AS (SELECT DISTINCT a.g AS s1, b.g AS s2 FROM sk a JOIN sk b ON a.g < b.g),
          |uh AS (SELECT DISTINCT p.s1, p.s2, x.h FROM pr p
@@ -1404,8 +1355,8 @@ object AnalyticsQueries {
          |  (CAST(n_inter AS DOUBLE) / CAST(n_u AS DOUBLE)) *
          |    (CASE WHEN n_u < $KmvK THEN CAST(n_u AS DOUBLE)
          |          ELSE CAST(${KmvK - 1} AS DOUBLE) * pow(2.0, 60.0) / CAST(h_u AS DOUBLE) END) AS inter_est
-         |FROM st ORDER BY s1, s2""".stripMargin,
-    "q205_kmv_growth" -> {
+         |FROM st ORDER BY s1, s2""".stripMargin),
+    Entry("q205_kmv_growth", kmvGrowth, {
       val estExpr = graft.functions.Sketch.O.kmvEstimate("ag.n_kept", "ag.hk", KmvK)
       s"""WITH mxv AS (SELECT MAX(doc_id) AS mx FROM documents),
          |w AS (SELECT CAST(floor(doc_id * 10 / (mx + 1)) AS INT) AS batch,
@@ -1428,8 +1379,8 @@ object AnalyticsQueries {
          |  ex.exact_cum_distinct,
          |  round(($estExpr) / CAST(ex.exact_cum_distinct AS DOUBLE), 6) AS est_ratio
          |FROM ag JOIN ex USING (batch) ORDER BY batch""".stripMargin
-    },
-    "q227_conformal_interval" ->
+    }),
+    Entry("q227_conformal_interval", conformalInterval,
       s"""WITH e AS MATERIALIZED (SELECT (hour(ts) + 1) / CAST(24.0 AS DOUBLE) AS x,
          |  value AS y, ${graft.operators.Sampling.O.hashBucket("event_id")} AS b FROM events),
          |g AS (SELECT CAST(COUNT(*) AS DOUBLE) AS n, ${N.sum("x")} AS sx, ${N.sum("y")} AS sy,
@@ -1450,8 +1401,8 @@ object AnalyticsQueries {
          |SELECT CAST(0.1 AS DOUBLE) AS alpha, round(w.m, 6) AS slope, round(w.c, 6) AS intercept,
          |  nc.n_cal, m2.halfwidth, m2.n_eval, m2.n_covered,
          |  round(CAST(n_covered AS DOUBLE) / CAST(n_eval AS DOUBLE), 6) AS coverage
-         |FROM w CROSS JOIN nc CROSS JOIN m2""".stripMargin,
-    "q223_band_auto_join" ->
+         |FROM w CROSS JOIN nc CROSS JOIN m2""".stripMargin),
+    Entry("q223_band_auto_join", bandAutoJoin,
       """WITH er AS (SELECT event_id AS eid, CAST(floor(epoch(ts)) AS BIGINT) AS et
         |  FROM events WHERE event_type = 'error'),
         |pu AS (SELECT event_id AS pid, CAST(floor(epoch(ts)) AS BIGINT) AS pt
@@ -1460,11 +1411,11 @@ object AnalyticsQueries {
         |SELECT COUNT(*) AS n_pairs,
         |  round(CAST(SUM(CAST(abs(et - pt) AS DECIMAL(38,6))) AS DOUBLE) / COUNT(abs(et - pt)), 6) AS avg_abs_dt,
         |  CAST(MIN(et - pt) AS BIGINT) AS min_dt, CAST(MAX(et - pt) AS BIGINT) AS max_dt
-        |FROM p""".stripMargin,
-    "q220_quantile_regression" ->
+        |FROM p""".stripMargin),
+    Entry("q220_quantile_regression", quantileRegression,
       graft.operators.QuantileReg.O.fitQuantiles(
-        "SELECT (hour(ts) + 1) / CAST(24.0 AS DOUBLE) AS x, value AS y FROM events"),
-    "q218_sketch_mad" -> {
+        "SELECT (hour(ts) + 1) / CAST(24.0 AS DOUBLE) AS x, value AS y FROM events")),
+    Entry("q218_sketch_mad", sketchMad, {
       import graft.operators.{Robust => R}
       s"""WITH e AS MATERIALIZED (SELECT event_type AS g, CAST(floor(value * 1000) AS BIGINT) AS v
          |  FROM events WHERE CAST(floor(value * 1000) AS BIGINT) >= 1),
@@ -1489,8 +1440,8 @@ object AnalyticsQueries {
          |FROM nn JOIN med ON med.g = nn.g JOIN mad ON mad.g = nn.g
          |  JOIN x50 ON x50.g = nn.g
          |ORDER BY event_type""".stripMargin
-    },
-    "q213_quantile_growth" -> {
+    }),
+    Entry("q213_quantile_growth", logQuantileGrowth, {
       import graft.operators.{Robust => R}
       def x(p: String, tag: String) =
         s"""x$tag AS (SELECT c.g, c.v FROM c JOIN cn USING (g)
@@ -1524,8 +1475,8 @@ object AnalyticsQueries {
          |FROM nn JOIN e50 USING (g) JOIN e99 USING (g)
          |  JOIN x50 ON x50.g = nn.g JOIN x99 ON x99.g = nn.g
          |ORDER BY batch""".stripMargin
-    },
-    "q193_theil_sen" ->
+    }),
+    Entry("q193_theil_sen", theilSen,
       s"""${cte.stripSuffix("\n").stripSuffix(")")}),
          |r AS (SELECT device_id,
          |        CAST(CAST(value AS DECIMAL(20,6)) * 1000000 AS BIGINT) AS vu,
@@ -1546,8 +1497,8 @@ object AnalyticsQueries {
          |SELECT m.device_id, np.n_points, CAST(m.npairs AS BIGINT) AS n_pairs,
          |  CAST(m.slope_u AS DOUBLE) / 1000000.0 AS ts_slope
          |FROM m JOIN np USING (device_id) WHERE mrn = (npairs + 1) // 2
-         |ORDER BY device_id""".stripMargin,
-    "q190_join_size_sketch" -> {
+         |ORDER BY device_id""".stripMargin),
+    Entry("q190_join_size_sketch", joinSizeSketch, {
       import graft.functions.{Sketch => SK}
       import graft.functions.expressions.CmsSketch.Depth
       s"""WITH evk AS (SELECT CAST(user_id AS VARCHAR) AS k FROM events WHERE user_id IS NOT NULL),
@@ -1580,12 +1531,12 @@ object AnalyticsQueries {
          |    round(CAST(est2.cms_est AS DOUBLE) / ex2.exact_rows, 6)
          |  FROM na, ex2, est2)
          |ORDER BY join_name""".stripMargin
-    },
-    "q73_zorder_key" ->
+    }),
+    Entry("q73_zorder_key", zorderKey,
       s"""WITH ${graft.functions.expressions.ZOrder2.oracleCtes(
              "SELECT event_id, user_id AS xa, (event_id % 1024) AS xb FROM events")}
-         |SELECT event_id, z FROM zf ORDER BY event_id""".stripMargin,
-    "q78_scd2_intervals" ->
+         |SELECT event_id, z FROM zf ORDER BY event_id""".stripMargin),
+    Entry("q78_scd2_intervals", scd2Intervals,
       s"""${cte.stripSuffix("\n").stripSuffix(")")}),
          |banded AS (SELECT device_id, event_id, time,
          |             CAST(floor(value / 100) AS BIGINT) AS band,
@@ -1598,8 +1549,8 @@ object AnalyticsQueries {
          |  (lead(time) OVER w IS NULL) AS is_current
          |FROM chg
          |WINDOW w AS (PARTITION BY device_id ORDER BY time, event_id)
-         |ORDER BY device_id, effective_from""".stripMargin,
-    "q76_funnel" ->
+         |ORDER BY device_id, effective_from""".stripMargin),
+    Entry("q76_funnel", funnel,
       """WITH t1 AS (SELECT user_id, min(ts) AS t1 FROM events WHERE event_type = 'view' GROUP BY 1),
         |t2 AS (SELECT e.user_id, min(e.ts) AS t2 FROM events e JOIN t1 ON e.user_id = t1.user_id
         |       WHERE e.event_type = 'click' AND e.ts > t1.t1 GROUP BY 1),
@@ -1607,19 +1558,19 @@ object AnalyticsQueries {
         |       WHERE e.event_type = 'purchase' AND e.ts > t2.t2 GROUP BY 1)
         |SELECT (SELECT COUNT(*) FROM t1) AS n_view,
         |       (SELECT COUNT(*) FROM t2) AS n_view_click,
-        |       (SELECT COUNT(*) FROM t3) AS n_view_click_purchase""".stripMargin,
-    "q77_histogram" ->
+        |       (SELECT COUNT(*) FROM t3) AS n_view_click_purchase""".stripMargin),
+    Entry("q77_histogram", histogram,
       s"""${cte}SELECT device_type, CAST(floor(value / 50) * 50 AS BIGINT) AS bin_lo, COUNT(*) AS n
-         |FROM readings GROUP BY 1, 2 ORDER BY device_type, bin_lo""".stripMargin,
-    "q74_trailing_distinct" ->
+         |FROM readings GROUP BY 1, 2 ORDER BY device_type, bin_lo""".stripMargin),
+    Entry("q74_trailing_distinct", trailingDistinct,
       """WITH du AS (SELECT DISTINCT CAST(ts AS DATE) AS day, user_id FROM events),
         |b AS (SELECT min(day) AS d0, max(day) AS d1 FROM du),
         |x AS (SELECT CAST(unnest(generate_series(CAST(day AS TIMESTAMP), CAST(day + 6 AS TIMESTAMP), INTERVAL 1 DAY)) AS DATE) AS bucket,
         |        user_id FROM du)
         |SELECT bucket, COUNT(DISTINCT user_id) AS users_7d
         |FROM x, b WHERE bucket BETWEEN d0 AND d1
-        |GROUP BY bucket ORDER BY bucket""".stripMargin,
-    "q75_cohort_retention" ->
+        |GROUP BY bucket ORDER BY bucket""".stripMargin),
+    Entry("q75_cohort_retention", cohortRetention,
       """WITH w AS (SELECT user_id,
         |             CAST(floor(date_diff('day', DATE '2024-01-01', CAST(ts AS DATE)) / 7) AS BIGINT) AS week
         |           FROM events),
@@ -1627,17 +1578,17 @@ object AnalyticsQueries {
         |SELECT f.cohort_week, (w.week - f.cohort_week) AS week_offset,
         |  COUNT(DISTINCT w.user_id) AS active_users
         |FROM w JOIN f ON w.user_id = f.user_id
-        |GROUP BY 1, 2 ORDER BY cohort_week, week_offset""".stripMargin,
-    "q60_skew_salted" ->
+        |GROUP BY 1, 2 ORDER BY cohort_week, week_offset""".stripMargin),
+    Entry("q60_skew_salted", skewSalted,
       s"""${cte}SELECT device_type, COUNT(value) AS n,
          |  ${N.sum("value")} AS sum_value,
          |  (${N.sum("value")} / COUNT(value)) AS avg_value
-         |FROM readings GROUP BY device_type ORDER BY device_type""".stripMargin,
-    "q118_salted_join" ->
+         |FROM readings GROUP BY device_type ORDER BY device_type""".stripMargin),
+    Entry("q118_salted_join", skewSaltedJoin,
       s"""SELECT c_mktsegment, COUNT(*) AS n_orders, ${N.sum("o_totalprice")} AS total_spend
          |FROM orders JOIN customer ON o_custkey = c_custkey
-         |GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q127_out_of_order" ->
+         |GROUP BY 1 ORDER BY 1""".stripMargin),
+    Entry("q127_out_of_order", outOfOrder,
       """WITH w AS (SELECT user_id, event_id, ts,
         |             lag(ts) OVER (PARTITION BY user_id ORDER BY event_id) AS prev_ts
         |           FROM events),
@@ -1648,8 +1599,8 @@ object AnalyticsQueries {
         |  COUNT(regress_us) AS n_backward,
         |  round(100.0 * COUNT(regress_us) / COUNT(*), 6) AS backward_pct,
         |  MAX(regress_us) AS max_regression_us
-        |FROM r GROUP BY user_id ORDER BY user_id""".stripMargin,
-    "q128_psi_drift" ->
+        |FROM r GROUP BY user_id ORDER BY user_id""".stripMargin),
+    Entry("q128_psi_drift", psiDrift,
       s"""WITH b AS (SELECT event_type,
          |             least(${PsiBins - 1}, greatest(0, CAST(floor(value / 25.0) AS INT))) AS bin,
          |             (ts < TIMESTAMP '$PsiSplit') AS early
@@ -1665,8 +1616,8 @@ object AnalyticsQueries {
          |      FROM c JOIN t USING (event_type) WHERE c1 > 0 AND c2 > 0)
          |SELECT event_type, COUNT(*) AS n_bins_used,
          |  round(CAST(SUM(CAST((p1 - p2) * ln(p1 / p2) AS DECIMAL(38,12))) AS DOUBLE), 6) AS psi
-         |FROM j GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q209_log_quantiles" -> {
+         |FROM j GROUP BY 1 ORDER BY 1""".stripMargin),
+    Entry("q209_log_quantiles", logQuantiles, {
       import graft.operators.{Robust => R}
       def x(p: String, tag: String) =
         s"""x$tag AS (SELECT c.g, c.v FROM c JOIN cn USING (g)
@@ -1694,8 +1645,8 @@ object AnalyticsQueries {
          |FROM nn JOIN e50 USING (g) JOIN e90 USING (g) JOIN e99 USING (g)
          |  JOIN x50 ON x50.g = nn.g JOIN x90 ON x90.g = nn.g JOIN x99 ON x99.g = nn.g
          |ORDER BY source""".stripMargin
-    },
-    "q122_hist_quantile" -> {
+    }),
+    Entry("q122_hist_quantile", histQuantile, {
       import graft.operators.{Robust => R}
       s"""WITH m AS (${R.O.histCte("events", "event_type", "value")}),
          |nn AS (SELECT g, CAST(MAX(n) AS BIGINT) AS n FROM m GROUP BY g),
@@ -1710,6 +1661,6 @@ object AnalyticsQueries {
          |  round(abs(est_p95 - exact_p95), 6) AS err_p95
          |FROM nn JOIN p50 USING (g) JOIN p95 USING (g) JOIN ex USING (g)
          |ORDER BY event_type""".stripMargin
-    }
+    })
   )
 }

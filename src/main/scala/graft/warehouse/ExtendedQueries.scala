@@ -252,28 +252,14 @@ object ExtendedQueries {
         col("n_alarms"))
       .orderBy("user_id")
 
-  val queries: Map[String, Q] = Map(
-    "q138_ewma_drift" -> ewmaDrift,
-    "q217_cusum_shifts" -> cusumShifts,
-    "q139_session_fold" -> sessionFold,
-    "q15_asof_join" -> asof,
-    "q16_sessions" -> sessions,
-    "q17_rollup" -> rollup,
-    "q18_count_distinct" -> countDistinct,
-    "q64_session_window" -> sessionWindow,
-    "q119_string_surface" -> stringSurface,
-    "q120_agg_surface" -> aggSurface,
-    "q121_event_paths" -> eventPaths,
-    "q135_argmax_mode" -> argmaxMode)
-
   import Num.{O => N}
 
-  val oracle: Map[String, String] = Map(
+  val entries: Seq[Entry] = Seq(
     // The fold is replayed as a RECURSIVE CTE (one exact sequential
     // step per event) rather than a list_reduce struct lambda: DuckDB
     // 1.0's struct-lambda fields can observe sibling assignments from
     // the same construction, silently changing the drift test.
-    "q138_ewma_drift" ->
+    Entry("q138_ewma_drift", ewmaDrift,
       """WITH RECURSIVE e0 AS (
         |  SELECT user_id, value,
         |    CAST(row_number() OVER (PARTITION BY user_id ORDER BY ts, value) AS BIGINT) AS rn
@@ -289,8 +275,8 @@ object ExtendedQueries {
         |  FROM f JOIN e0 x ON x.user_id = f.user_id AND x.rn = f.rn + 1),
         |last AS (SELECT user_id, MAX(rn) AS rn FROM f GROUP BY user_id)
         |SELECT f.user_id, f.n AS n_events, round(f.e, 6) AS ewma, f.d AS n_drift
-        |FROM f JOIN last USING (user_id, rn) ORDER BY user_id""".stripMargin,
-    "q217_cusum_shifts" -> {
+        |FROM f JOIN last USING (user_id, rn) ORDER BY user_id""".stripMargin),
+    Entry("q217_cusum_shifts", cusumShifts, {
       val sp = "greatest(CAST(0 AS DOUBLE), f.sp + (x.value - f.su / 5.0 - 50.0))"
       val sn = "greatest(CAST(0 AS DOUBLE), f.sn + (f.su / 5.0 - x.value - 50.0))"
       s"""WITH RECURSIVE e0 AS (
@@ -318,8 +304,8 @@ object ExtendedQueries {
          |  round(f.sp, 6) AS cusum_pos, round(f.sn, 6) AS cusum_neg,
          |  f.a AS n_alarms
          |FROM f JOIN last USING (user_id, rn) ORDER BY user_id""".stripMargin
-    },
-    "q139_session_fold" ->
+    }),
+    Entry("q139_session_fold", sessionFold,
       s"""WITH w AS (SELECT user_id, ts, value,
          |         CASE WHEN lag(ts) OVER win IS NULL
          |              OR epoch_ms(ts) - epoch_ms(lag(ts) OVER win) > ${SessionFoldGapSeconds * 1000L}
@@ -331,8 +317,8 @@ object ExtendedQueries {
          |SELECT user_id, epoch_ms(MIN(ts)) AS start_ms, epoch_ms(MAX(ts)) AS end_ms,
          |  COUNT(*) AS n_events,
          |  round(CAST(SUM(CAST(value AS DECIMAL(38,6))) AS DOUBLE), 6) AS sum_value
-         |FROM g GROUP BY user_id, sid ORDER BY user_id, start_ms""".stripMargin,
-    "q135_argmax_mode" ->
+         |FROM g GROUP BY user_id, sid ORDER BY user_id, start_ms""".stripMargin),
+    Entry("q135_argmax_mode", argmaxMode,
       """WITH mx AS (SELECT event_type, user_id AS top_user, value AS top_value FROM (
         |       SELECT event_type, user_id, value,
         |         row_number() OVER (PARTITION BY event_type ORDER BY value DESC, event_id DESC) AS rn
@@ -348,8 +334,8 @@ object ExtendedQueries {
         |             FROM events GROUP BY 1, 2)) WHERE rn = 1)
         |SELECT event_type, top_user, top_value, bottom_user, bottom_value, mode_bucket, mode_count
         |FROM mx JOIN mn USING (event_type) JOIN md USING (event_type)
-        |ORDER BY event_type""".stripMargin,
-    "q119_string_surface" ->
+        |ORDER BY event_type""".stripMargin),
+    Entry("q119_string_surface", stringSurface,
       """SELECT doc_id,
         |  upper(lang) AS lang_up,
         |  lpad(source, 8, '_') AS src_pad,
@@ -361,22 +347,22 @@ object ExtendedQueries {
         |  starts_with(text, 'the') AS starts_the,
         |  ends_with(text, 's') AS ends_s,
         |  contains(text, 'data') AS has_data
-        |FROM documents ORDER BY doc_id""".stripMargin,
-    "q120_agg_surface" ->
+        |FROM documents ORDER BY doc_id""".stripMargin),
+    Entry("q120_agg_surface", aggSurface,
       """SELECT event_type, COUNT(*) AS n,
         |  CAST(count_if(value > 100) AS BIGINT) AS n_high,
         |  bool_and(value >= 0) AS all_nonneg,
         |  bool_or(value > 400) AS any_gt400,
         |  round(median(value), 6) AS median_value
-        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin,
-    "q121_event_paths" ->
+        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin),
+    Entry("q121_event_paths", eventPaths,
       """WITH w AS (SELECT user_id, event_type, ts, event_id,
         |             row_number() OVER (PARTITION BY user_id ORDER BY ts, event_id) AS rn
         |           FROM events)
         |SELECT user_id, COUNT(*) AS n_events,
         |  md5(string_agg(CASE WHEN rn <= 50 THEN event_type END, '>' ORDER BY ts, event_id)) AS path_md5
-        |FROM w GROUP BY user_id ORDER BY user_id""".stripMargin,
-    "q15_asof_join" ->
+        |FROM w GROUP BY user_id ORDER BY user_id""".stripMargin),
+    Entry("q15_asof_join", asof,
       """WITH l AS (SELECT user_id, ts, event_id, CAST(NULL AS BIGINT) AS rid,
         |             CAST(NULL AS STRUCT(asof_ts TIMESTAMP, asof_event_id BIGINT, asof_value DOUBLE)) AS p,
         |             1 AS side
@@ -394,8 +380,8 @@ object ExtendedQueries {
         |SELECT event_id, user_id, ts, af.asof_event_id AS asof_event_id,
         |  af.asof_value AS asof_value, af.asof_ts AS asof_ts,
         |  CAST(floor(epoch(ts)) AS BIGINT) - CAST(floor(epoch(af.asof_ts)) AS BIGINT) AS gap_seconds
-        |FROM c WHERE side = 1 ORDER BY event_id""".stripMargin,
-    "q16_sessions" ->
+        |FROM c WHERE side = 1 ORDER BY event_id""".stripMargin),
+    Entry("q16_sessions", sessions,
       """WITH g AS (
         |  SELECT user_id, ts, event_id,
         |    CASE WHEN lag(ts, 1) OVER w IS NULL
@@ -411,19 +397,19 @@ object ExtendedQueries {
         |  min(ts) AS session_start, max(ts) AS session_end,
         |  CAST(floor(epoch(max(ts))) AS BIGINT) - CAST(floor(epoch(min(ts))) AS BIGINT) AS duration_seconds
         |FROM s GROUP BY user_id, session_seq
-        |ORDER BY user_id, session_seq""".stripMargin,
-    "q17_rollup" ->
+        |ORDER BY user_id, session_seq""".stripMargin),
+    Entry("q17_rollup", rollup,
       s"""SELECT l_returnflag, l_linestatus, COUNT(*) AS n_items,
          |  ${N.sum("l_quantity")} AS sum_qty,
          |  CAST(GROUPING(l_returnflag, l_linestatus) AS BIGINT) AS gid
          |FROM lineitem GROUP BY ROLLUP(l_returnflag, l_linestatus)
-         |ORDER BY gid, l_returnflag NULLS FIRST, l_linestatus NULLS FIRST""".stripMargin,
-    "q18_count_distinct" ->
+         |ORDER BY gid, l_returnflag NULLS FIRST, l_linestatus NULLS FIRST""".stripMargin),
+    Entry("q18_count_distinct", countDistinct,
       """SELECT event_type, COUNT(*) AS n_events,
         |  COUNT(DISTINCT user_id) AS n_users,
         |  COUNT(DISTINCT CASE WHEN value > 250 THEN user_id END) AS n_big_spenders
-        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin,
-    "q64_session_window" ->
+        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin),
+    Entry("q64_session_window", sessionWindow,
       """WITH g AS (
         |  SELECT user_id, ts, event_id,
         |    CASE WHEN lag(ts, 1) OVER w IS NULL
@@ -439,6 +425,6 @@ object ExtendedQueries {
         |  COUNT(*) AS n_events,
         |  CAST(floor(epoch(max(ts))) AS BIGINT) - CAST(floor(epoch(min(ts))) AS BIGINT) AS duration_seconds
         |FROM s GROUP BY user_id, session_seq
-        |ORDER BY user_id, session_start""".stripMargin
+        |ORDER BY user_id, session_start""".stripMargin)
   )
 }

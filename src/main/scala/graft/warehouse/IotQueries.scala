@@ -182,27 +182,6 @@ object IotQueries {
       col("now_ts"))
   }
 
-  val queries: Map[String, Q] = Map(
-    "q20_time_features" -> timeFeatures,
-    "q21_validity_flags" -> validityFlags,
-    "q22_quality_rates" -> qualityRates,
-    "q23_rolling_stats" -> rollingStats,
-    "q24_lag_features" -> lagFeatures,
-    "q25_zscore" -> zscore,
-    "q26_latest_per_device" -> latestPerDevice,
-    "q27_hourly_agg" -> hourlyAgg,
-    "q28_daily_agg" -> dailyAgg,
-    "q29_device_health" -> deviceHealth,
-    "q30_anomaly_trend" -> anomalyTrend,
-    "q31_hour_profile" -> hourProfile,
-    "q32_weekend_compare" -> weekendCompare,
-    "q33_business_hours_diff" -> businessHoursDiff,
-    "q34_minute_window" -> minuteWindow,
-    "q35_device_stats" -> deviceStatsQ,
-    "q231_anomaly_context" -> anomalyContext,
-    "q232_ml_feature_export" -> mlFeatureExport,
-    "q236_windowed_topk" -> windowedTopKQ)
-
   import Num.{O => N}
   import TimeF.{O => T}
 
@@ -216,26 +195,26 @@ object IotQueries {
        |      THEN (value - ${N.sum("value", " OVER wz")} / CAST(COUNT(value) OVER wz AS DOUBLE))
        |           / (${N.stddev("value", " OVER wz")}) END) > 3.0, false)""".stripMargin
 
-  val oracle: Map[String, String] = Map(
-    "q20_time_features" -> (cte() +
+  val entries: Seq[Entry] = Seq(
+    Entry("q20_time_features", timeFeatures, (cte() +
       s"""SELECT event_id, ${T.hourOf("time")} AS hour_of_day, ${T.dow("time")} AS day_of_week,
          |  CAST(month(time) AS INT) AS month, ${T.isWeekend("time")} AS is_weekend,
          |  ${T.isBusinessHours("time")} AS is_business_hours
-         |FROM readings ORDER BY event_id""".stripMargin),
-    "q21_validity_flags" -> (cte() +
+         |FROM readings ORDER BY event_id""".stripMargin)),
+    Entry("q21_validity_flags", validityFlags, (cte() +
       """SELECT event_id, (value IS NULL) AS has_null_value,
         |  (quality_score IS NULL OR quality_score < 0 OR quality_score > 100) AS has_invalid_quality,
         |  (NOT (value IS NULL) AND NOT (quality_score IS NULL OR quality_score < 0 OR quality_score > 100)) AS is_valid_record
-        |FROM readings ORDER BY event_id""".stripMargin),
-    "q22_quality_rates" -> (cte() +
+        |FROM readings ORDER BY event_id""".stripMargin)),
+    Entry("q22_quality_rates", qualityRates, (cte() +
       s"""SELECT device_type, COUNT(*) AS n_readings,
          |  CAST(SUM(CASE WHEN value IS NOT NULL AND quality_score BETWEEN 0 AND 100 THEN 1 ELSE 0 END) AS BIGINT) AS n_valid,
          |  round(100.0 * CAST(SUM(CASE WHEN value IS NOT NULL AND quality_score BETWEEN 0 AND 100 THEN 1 ELSE 0 END) AS BIGINT) / COUNT(*), 6) AS valid_pct,
          |  CAST(SUM(CASE WHEN quality_score >= 50 THEN 1 ELSE 0 END) AS BIGINT) AS n_high_quality,
          |  round(100.0 * CAST(SUM(CASE WHEN quality_score >= 50 THEN 1 ELSE 0 END) AS BIGINT) / COUNT(*), 6) AS high_quality_pct,
          |  round(${N.avg("quality_score")}, 6) AS avg_quality
-         |FROM readings GROUP BY device_type ORDER BY device_type""".stripMargin),
-    "q23_rolling_stats" -> (cte() +
+         |FROM readings GROUP BY device_type ORDER BY device_type""".stripMargin)),
+    Entry("q23_rolling_stats", rollingStats, (cte() +
       s"""SELECT event_id, value,
          |  round(${N.avg("value", " OVER w5m")}, 6) AS rolling_avg_5min,
          |  round(${N.avg("value", " OVER w1h")}, 6) AS rolling_avg_1h,
@@ -245,16 +224,16 @@ object IotQueries {
          |WINDOW
          |  w5m AS (PARTITION BY device_id ORDER BY ts_seconds RANGE BETWEEN 300 PRECEDING AND CURRENT ROW),
          |  w1h AS (PARTITION BY device_id ORDER BY ts_seconds RANGE BETWEEN 3600 PRECEDING AND CURRENT ROW)
-         |ORDER BY event_id""".stripMargin),
-    "q24_lag_features" -> (cte() +
+         |ORDER BY event_id""".stripMargin)),
+    Entry("q24_lag_features", lagFeatures, (cte() +
       """SELECT event_id, value,
         |  lag(value, 1) OVER w AS value_lag_1,
         |  lag(value, 2) OVER w AS value_lag_2,
         |  value - lag(value, 1) OVER w AS value_change
         |FROM readings
         |WINDOW w AS (PARTITION BY device_id ORDER BY time, event_id)
-        |ORDER BY event_id""".stripMargin),
-    "q25_zscore" -> (cte() +
+        |ORDER BY event_id""".stripMargin)),
+    Entry("q25_zscore", zscore, (cte() +
       s"""SELECT event_id, value,
          |  round(${N.sum("value", " OVER w")} / CAST(COUNT(value) OVER w AS DOUBLE), 6) AS value_mean,
          |  round(${N.stddev("value", " OVER w")}, 6) AS value_stddev,
@@ -266,13 +245,13 @@ object IotQueries {
          |             / (${N.stddev("value", " OVER w")}) END) > 3.0, false) AS is_anomaly_zscore
          |FROM readings
          |WINDOW w AS (PARTITION BY device_id, device_type)
-         |ORDER BY event_id""".stripMargin),
-    "q26_latest_per_device" -> (cte() +
+         |ORDER BY event_id""".stripMargin)),
+    Entry("q26_latest_per_device", latestPerDevice, (cte() +
       """SELECT device_id, time, device_type, value, quality_score FROM (
         |  SELECT *, row_number() OVER (PARTITION BY device_id ORDER BY time DESC, event_id DESC) AS rn
         |  FROM readings) WHERE rn = 1
-        |ORDER BY device_id""".stripMargin),
-    "q27_hourly_agg" -> (cte() +
+        |ORDER BY device_id""".stripMargin)),
+    Entry("q27_hourly_agg", hourlyAgg, (cte() +
       s"""SELECT date_trunc('hour', time) AS bucket, device_type,
          |  COUNT(*) AS reading_count,
          |  round(${N.avg("value")}, 6) AS avg_value,
@@ -282,8 +261,8 @@ object IotQueries {
          |  round(quantile_cont(value, 0.95), 6) AS p95_value,
          |  $anomCnt AS anomaly_count,
          |  round(${N.avg("quality_score")}, 6) AS avg_quality_score
-         |FROM readings GROUP BY 1, 2 ORDER BY bucket, device_type""".stripMargin),
-    "q28_daily_agg" -> (cte() +
+         |FROM readings GROUP BY 1, 2 ORDER BY bucket, device_type""".stripMargin)),
+    Entry("q28_daily_agg", dailyAgg, (cte() +
       s"""SELECT date_trunc('day', time) AS bucket, device_type,
          |  COUNT(*) AS reading_count,
          |  round(${N.avg("value")}, 6) AS avg_value,
@@ -291,8 +270,8 @@ object IotQueries {
          |  round(${N.avg("CASE WHEN hour(time) BETWEEN 9 AND 17 THEN value END")}, 6) AS avg_value_business_hours,
          |  round(${N.avg("CASE WHEN NOT (hour(time) BETWEEN 9 AND 17) THEN value END")}, 6) AS avg_value_off_hours,
          |  $anomCnt AS anomaly_count
-         |FROM readings GROUP BY 1, 2 ORDER BY bucket, device_type""".stripMargin),
-    "q29_device_health" -> (cte(
+         |FROM readings GROUP BY 1, 2 ORDER BY bucket, device_type""".stripMargin)),
+    Entry("q29_device_health", deviceHealth, (cte(
       "now_cte AS (SELECT max(time) AS now_ts FROM readings)") +
       s"""SELECT device_id, COUNT(*) AS reading_count,
          |  round(${N.avg("value")}, 6) AS avg_value,
@@ -303,32 +282,32 @@ object IotQueries {
          |  CAST(floor(epoch(max(now_ts))) AS BIGINT) - CAST(floor(epoch(max(time))) AS BIGINT) AS seconds_since_last
          |FROM readings, now_cte
          |WHERE time > now_ts - INTERVAL 24 HOUR
-         |GROUP BY device_id ORDER BY device_id""".stripMargin),
-    "q30_anomaly_trend" -> (cte() +
+         |GROUP BY device_id ORDER BY device_id""".stripMargin)),
+    Entry("q30_anomaly_trend", anomalyTrend, (cte() +
       s"""SELECT date_trunc('hour', time) AS bucket, device_type,
          |  COUNT(*) AS reading_count, $anomCnt AS anomaly_count,
          |  round(100.0 * $anomCnt / COUNT(*), 6) AS anomaly_rate_pct
-         |FROM readings GROUP BY 1, 2 ORDER BY bucket, device_type""".stripMargin),
-    "q31_hour_profile" -> (cte() +
+         |FROM readings GROUP BY 1, 2 ORDER BY bucket, device_type""".stripMargin)),
+    Entry("q31_hour_profile", hourProfile, (cte() +
       s"""SELECT ${T.hourOf("time")} AS hour_of_day, device_type,
          |  COUNT(*) AS reading_count,
          |  round(${N.avg("value")}, 6) AS avg_value,
          |  round(${N.stddev("value")}, 6) AS stddev_value
-         |FROM readings GROUP BY 1, 2 ORDER BY hour_of_day, device_type""".stripMargin),
-    "q32_weekend_compare" -> (cte() +
+         |FROM readings GROUP BY 1, 2 ORDER BY hour_of_day, device_type""".stripMargin)),
+    Entry("q32_weekend_compare", weekendCompare, (cte() +
       s"""SELECT device_type, ${T.isWeekend("time")} AS is_weekend,
          |  COUNT(*) AS reading_count,
          |  round(${N.avg("value")}, 6) AS avg_value,
          |  round(${N.avg("quality_score")}, 6) AS avg_quality_score
-         |FROM readings GROUP BY 1, 2 ORDER BY device_type, is_weekend""".stripMargin),
-    "q33_business_hours_diff" -> (cte() +
+         |FROM readings GROUP BY 1, 2 ORDER BY device_type, is_weekend""".stripMargin)),
+    Entry("q33_business_hours_diff", businessHoursDiff, (cte() +
       s"""SELECT device_type,
          |  round(${N.avg("CASE WHEN hour(time) BETWEEN 9 AND 17 THEN value END")}, 6) AS avg_business_hours,
          |  round(${N.avg("CASE WHEN NOT (hour(time) BETWEEN 9 AND 17) THEN value END")}, 6) AS avg_off_hours,
          |  round(round(${N.avg("CASE WHEN hour(time) BETWEEN 9 AND 17 THEN value END")}, 6)
          |      - round(${N.avg("CASE WHEN NOT (hour(time) BETWEEN 9 AND 17) THEN value END")}, 6), 6) AS business_hours_delta
-         |FROM readings GROUP BY device_type ORDER BY device_type""".stripMargin),
-    "q34_minute_window" -> (cte() +
+         |FROM readings GROUP BY device_type ORDER BY device_type""".stripMargin)),
+    Entry("q34_minute_window", minuteWindow, (cte() +
       s"""SELECT date_trunc('minute', time) AS window_start,
          |  date_trunc('minute', time) + INTERVAL 1 MINUTE AS window_end,
          |  device_id, device_type, COUNT(*) AS reading_count,
@@ -337,8 +316,8 @@ object IotQueries {
          |  round(${N.stddev("value")}, 6) AS stddev_value,
          |  $anomCnt AS anomaly_count,
          |  round(${N.avg("quality_score")}, 6) AS avg_quality_score
-         |FROM readings GROUP BY 1, 2, 3, 4 ORDER BY window_start, device_id, device_type""".stripMargin),
-    "q35_device_stats" -> (cte(
+         |FROM readings GROUP BY 1, 2, 3, 4 ORDER BY window_start, device_id, device_type""".stripMargin)),
+    Entry("q35_device_stats", deviceStatsQ, (cte(
       "params AS (SELECT min(device_id) AS target_device, max(time) AS now_ts FROM readings)") +
       s"""SELECT device_id, COUNT(*) AS reading_count,
          |  round(${N.avg("value")}, 6) AS avg_value,
@@ -348,8 +327,8 @@ object IotQueries {
          |  round(${N.avg("quality_score")}, 6) AS avg_quality_score
          |FROM readings, params
          |WHERE device_id = target_device AND time BETWEEN now_ts - INTERVAL 7 DAY AND now_ts
-         |GROUP BY device_id ORDER BY device_id""".stripMargin),
-    "q231_anomaly_context" -> (cte(
+         |GROUP BY device_id ORDER BY device_id""".stripMargin)),
+    Entry("q231_anomaly_context", anomalyContext, (cte(
       "now_cte AS (SELECT max(time) AS now_ts FROM readings)") +
       s"""SELECT time, device_id, device_type, value, rolling_avg_1h,
          |  value - rolling_avg_1h AS deviation_from_avg, quality_score, event_id
@@ -362,16 +341,16 @@ object IotQueries {
          |    w1h AS (PARTITION BY device_id ORDER BY ts_seconds RANGE BETWEEN 3600 PRECEDING AND CURRENT ROW),
          |    wz AS (PARTITION BY device_id, device_type))
          |WHERE is_anomaly_combined AND time > now_ts - INTERVAL 24 HOUR
-         |ORDER BY time DESC, event_id DESC LIMIT 50""".stripMargin),
-    "q236_windowed_topk" -> (cte() +
+         |ORDER BY time DESC, event_id DESC LIMIT 50""".stripMargin)),
+    Entry("q236_windowed_topk", windowedTopKQ, (cte() +
       """SELECT window_start, device_type, rank, value, event_id FROM (
         |  SELECT date_trunc('minute', time) AS window_start, device_type, value, event_id,
         |    CAST(row_number() OVER (PARTITION BY date_trunc('minute', time), device_type
         |      ORDER BY value DESC, event_id) AS INT) AS rank
         |  FROM readings WHERE value IS NOT NULL)
         |WHERE rank <= 3
-        |ORDER BY window_start, device_type, rank""".stripMargin),
-    "q232_ml_feature_export" -> (cte(
+        |ORDER BY window_start, device_type, rank""".stripMargin)),
+    Entry("q232_ml_feature_export", mlFeatureExport, (cte(
       "now_cte AS (SELECT max(time) AS now_ts FROM readings)") +
       s"""SELECT time, device_id, device_type, value, rolling_avg_5min, rolling_avg_1h,
          |  value_lag_1, value_lag_2, value_change, hour_of_day, day_of_week,
@@ -394,6 +373,6 @@ object IotQueries {
          |    wl AS (PARTITION BY device_id ORDER BY time, event_id),
          |    wz AS (PARTITION BY device_id, device_type))
          |WHERE time > now_ts - INTERVAL 30 DAY AND is_valid_record AND rolling_avg_1h IS NOT NULL
-         |ORDER BY device_id, time, event_id""".stripMargin)
+         |ORDER BY device_id, time, event_id""".stripMargin))
   )
 }

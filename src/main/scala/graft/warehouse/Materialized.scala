@@ -67,16 +67,19 @@ object Materialized {
       }
     })
     def builtFrame: Option[DataFrame] = built
-    /** The RDD actually holding the checkpointed blocks. Dataset
-      * .unpersist only clears CacheManager entries, and a local
-      * checkpoint's blocks live OUTSIDE the CacheManager — eviction
-      * must unpersist the LogicalRDD's rdd or the blocks linger until
-      * GC + ContextCleaner get around to them.
-      */
-    def checkpointedRdd: Option[org.apache.spark.rdd.RDD[_]] =
-      built.flatMap(_.queryExecution.analyzed.collectFirst {
-        case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
-      })
+  }
+
+  /** Frees the storage `df` itself holds. Dataset.unpersist only clears
+    * CacheManager entries, and a local checkpoint's blocks live OUTSIDE
+    * the CacheManager: for a checkpointed frame (a LogicalRDD at the
+    * plan root) the LogicalRDD's rdd is unpersisted, or the blocks
+    * linger until GC + ContextCleaner get around to them. Only the root
+    * counts — a projection over a checkpoint does not own it, and other
+    * frames may still read it. The release is asynchronous.
+    */
+  def release(df: DataFrame): Unit = df.queryExecution.analyzed match {
+    case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.unpersist(blocking = false)
+    case _ => df.unpersist()
   }
 
   private val reg =
@@ -135,14 +138,11 @@ object Materialized {
     dropCell((s, dir, key))
 
   private def dropCell(k: (SparkSession, String, String)): Unit =
-    reg.remove(k).foreach { cell =>
-      // unpersist the CHECKPOINTED RDD, not the Dataset: localCheckpoint
-      // blocks live outside the CacheManager, so Dataset.unpersist would
-      // free nothing and per-run eviction (StressBench's cold-cold
-      // contract) would leak every prior run's blocks until GC
-      cell.checkpointedRdd
-        .foreach(r => try r.unpersist(blocking = false) catch { case _: Throwable => () })
-    }
+    // best-effort: per-run eviction (StressBench's cold-cold contract)
+    // must not leak a prior run's blocks, but a stopped context has
+    // already dropped them
+    reg.remove(k).flatMap(_.builtFrame)
+      .foreach(f => try release(f) catch { case _: Throwable => () })
 
   /** The artifact for `key` over the corpus at `dir`, building and
     * persisting it on first use. The eager count() plays the role of

@@ -3921,258 +3921,13 @@ object PipelineQueries {
   val damerauPairs: Q = (s, dir) =>
     Dedup.damerauPairs(docs(s, dir)).orderBy("d1", "d2")
 
-  val queries: Map[String, Q] = Map(
-    "q195_damerau" -> damerauPairs,
-    "q194_jaro_winkler" -> jaroWinklerPairs,
-    "q222_entity_resolution" -> entityResolution,
-    "q192_ann_hubness" -> annHubness,
-    "q191_deletion_impact" -> deletionImpact,
-    "q189_blocklist" -> blocklist,
-    "q241_phrase_search" -> phraseSearch,
-    "q243_cluster_sample" -> clusterSample,
-    "q244_boilerplate" -> boilerplate,
-    "q245_dhash_clusters" -> dhashClusters,
-    "q246_isotropy" -> isotropy,
-    "q253_abtt_transform" -> abttTransform,
-    "q247_dhash_histogram" -> dhashHistogram,
-    "q248_phrase_indexed" -> phraseSearchIndexed,
-    "q251_phrase_ngram" -> phraseSearchNgram,
-    "q252_bm25_indexed" -> bm25Indexed,
-    "q255_term_proximity" -> termProximity,
-    "q256_abtt_cosine_shift" -> abttCosineShift,
-    "q257_min_window" -> minWindow,
-    "q258_min_window_snippets" -> minWindowSnippets,
-    "q259_dirichlet_ql" -> dirichletQl,
-    "q260_incremental_postings" -> incrementalPostings,
-    "q261_hybrid_text_rrf" -> hybridTextRrf,
-    "q262_hybrid_dense_lexical" -> hybridDenseLexical,
-    "q263_abtt_topd" -> abttTopD,
-    "q264_ann_ivf_indexed" -> annIvfIndexed,
-    "q265_global_packing" -> globalPacking,
-    "q266_ann_ivf_incremental" -> annIvfIncremental,
-    "q267_hybrid_incremental" -> hybridIncremental,
-    "q268_ann_ivf_deletion" -> annIvfDeletion,
-    "q269_ann_list_sizes" -> annListSizes,
-    "q270_text_deletion" -> textDeletion,
-    "q271_ivf_compacted" -> annIvfCompacted,
-    "q272_text_compacted" -> textCompacted,
-    "q273_ivf_tombstoned" -> annIvfTombstoned,
-    "q274_text_tombstoned" -> textTombstoned,
-    "q275_retrain_recall" -> retrainRecall,
-    "q276_ann_filtered" -> annFiltered,
-    "q277_ann_filtered_recall" -> annFilteredRecall,
-    "q278_hybrid_lifecycle" -> hybridLifecycle,
-    "q279_kneser_ney" -> knScores,
-    "q280_ann_adaptive" -> annAdaptive,
-    "q281_adaptive_recall" -> adaptiveRecall,
-    "q282_cluster_topics" -> clusterTopicsQ,
-    "q283_soft_dedup" -> softDedupQ,
-    "q284_ccnet_buckets" -> ccnetBuckets,
-    "q285_knn_shapley" -> knnShapleyQ,
-    "q286_rm3_expansion" -> rm3Expansion,
-    "q287_rm3_rerank" -> rm3Reranked,
-    "q288_query_clarity" -> clarityQ,
-    "q289_percolator" -> percolatorQ,
-    "q290_linear_shap" -> shapQ,
-    "q291_psi_drift" -> psiQ,
-    "q292_calibration" -> calibrationQ,
-    "q293_percolator_bool" -> percolatorBoolQ,
-    "q294_substring_removal" -> substringRemovalQ,
-    "q295_bleu_pairs" -> bleuPairsQ,
-    "q296_rouge_pairs" -> rougePairsQ,
-    "q297_readability" -> readabilityQ,
-    "q298_diversity" -> diversityQ,
-    "q299_training_order" -> trainingOrderQ,
-    "q300_curriculum_order" -> curriculumOrderQ,
-    "q301_novelty_curve" -> noveltyCurveQ,
-    "q302_substring_gate" -> substringGateQ,
-    "q303_systematic_resample" -> systematicResampleQ,
-    "q304_lsh_tuning" -> lshTuningQ,
-    "q305_mixture_interleave" -> mixtureInterleaveQ,
-    "q306_kn_localize" -> knWindowLocalizeQ,
-    "q307_rouge_l" -> rougeLQ,
-    "q308_dataset_card" -> datasetCardQ,
-    "q309_chrf" -> chrfQ,
-    "q310_gram_store_gate" -> gramStoreGateQ,
-    "q311_wer" -> werQ,
-    "q312_gram_store_erased" -> gramStoreErasedQ,
-    "q313_source_dup_burden" -> sourceDupBurdenQ,
-    "q314_boilerplate_flow" -> boilerplateFlowQ,
-    "q315_metric_agreement" -> metricAgreementQ,
-    "q316_trust_rank" -> trustRankQ,
-    "q317_modularity" -> modularityQ,
-    "q318_fim_examples" -> fimQ,
-    "q319_spam_mass" -> spamMassQ,
-    "q320_phrase_percolator" -> phrasePercolatorQ,
-    "q321_shapley_capped" -> knnShapleyCappedQ,
-    "q322_percolator_table" -> percolatorTableQ,
-    "q323_hits" -> hitsQ,
-    "q324_binary_ann" -> annBinary,
-    "q325_binary_recall" -> binaryRecall,
-    "q326_kcore" -> kCoreQ,
-    "q327_label_prop" -> labelPropQ,
-    "q328_phrase_table" -> phraseTableQ,
-    "q329_bbit_minhash" -> bbitMinhashQ,
-    "q330_err_at_10" -> errQ,
-    "q331_silhouette" -> silhouetteQ,
-    "q332_passage_maxp" -> passageMaxPQ,
-    "q333_binary_incremental" -> binaryIncremental,
-    "q334_cluster_split" -> clusterSplitQ,
-    "q335_mann_whitney" -> mannWhitneyQ,
-    "q336_wig" -> wigQ,
-    "q337_burstiness" -> burstinessQ,
-    "q338_percolator_bool_table" -> percolatorBoolTableQ,
-    "q339_weighted_label_prop" -> labelPropWeightedQ,
-    "q340_perc_store_census" -> percStoreCensusQ,
-    "q341_perc_store_travel" -> percStoreTravelQ,
-    "q342_kendall_tau" -> kendallTauQ,
-    "q343_mixture_plan" -> mixturePlanQ,
-    "q344_perc_store_diff" -> percStoreDiffQ,
-    "q345_label_noise" -> labelNoiseQ,
-    "q185_modality_stats" -> modalityStats,
-    "q186_byte_entropy" -> byteEntropy,
-    "q187_decode_features" -> decodeFeatures,
-    "q188_resize_plan" -> resizePlan,
-    "q237_dhash_neardup" -> dhashNearDup,
-    "q254_dhash_binary" -> dhashBinary,
-    "q238_persisted_index" -> persistedIndex,
-    "q239_dhash_incremental" -> dhashIncremental,
-    "q184_stream_gate" -> streamGateTwin,
-    "q183_embedding_qa" -> embeddingQa,
-    "q182_heaps_fit" -> heapsGrowth,
-    "q180_quality_calibration" -> qualityCalibration,
-    "q181_distinct_ngrams" -> distinctNgrams,
-    "q179_subword_tokens" -> subwordTokens,
-    "q199_unigram_tokens" -> unigramTokens,
-    "q200_unigram_vocab" -> unigramVocab,
-    "q201_signal_agreement" -> signalAgreement,
-    "q202_auc_by_lang" -> aucByLang,
-    "q204_budget_selection" -> budgetSelection,
-    "q212_doremi_mixture" -> doremiMixture,
-    "q206_matryoshka_recall" -> matryoshkaRecall,
-    "q178_classifier_sampled" -> classifierSampled,
-    "q177_curation_pipeline" -> curationPipeline,
-    "q176_kcenter_coreset" -> kCenterCoreset,
-    "q173_cross_source_dups" -> crossSourceDups,
-    "q174_length_distribution" -> lengthDistribution,
-    "q175_scrub_audit" -> scrubAudit,
-    "q168_gopher_rules" -> gopherRules,
-    "q210_pareto_skyline" -> paretoSkyline,
-    "q211_keyness" -> keyness,
-    "q215_lang_source_mi" -> langSourceMi,
-    "q225_equi_depth_profile" -> equiDepthProfile,
-    "q221_benford_audit" -> benfordAudit,
-    "q226_tail_index" -> tailIndex,
-    "q216_rrf_fusion" -> rrfFusion,
-    "q169_standardize" -> standardizeEmb,
-    "q170_mmr_rerank" -> mmrRerank,
-    "q171_domain_classifier" -> domainClassifier,
-    "q172_classifier_scores" -> classifierScores,
-    "q198_classifier_auc" -> classifierAuc,
-    "q219_conformal_gate" -> conformalGate,
-    "q228_classifier_cv" -> classifierCv,
-    "q229_learning_curve" -> learningCurve,
-    "q230_neyman_plan" -> neymanPlan,
-    "q161_ivfpq" -> ivfPq,
-    "q162_jl_projection" -> jlProjection,
-    "q163_jl_distortion" -> jlDistortion,
-    "q164_winnowing" -> winnowing,
-    "q165_winnow_overlap" -> winnowOverlap,
-    "q166_jl_kmeans_agreement" -> ((s, dir) =>
-      Similarity.jlKmeansAgreement(emb(s, dir), Some(mKmeansL2(s, dir)))),
-    "q167_padding_waste" ->
-      ((s, dir) => Corpus.paddingWaste(docs(s, dir)).orderBy("strategy")),
-    "q155_pq_codes" -> pqEncoding,
-    "q156_pq_adc" -> pqAdc,
-    "q157_cdc_chunks" -> cdcChunking,
-    "q158_cdc_dedup" -> cdcDedup,
-    "q159_stupid_backoff" -> stupidBackoff,
-    "q160_pq_recall" -> pqRecall,
-    "q154_span_corruption" -> spanCorruption,
-    "q153_dsir" -> dsirScores,
-    "q151_source_divergence" -> sourceDivergence,
-    "q152_temperature_mixture" -> temperatureMixture,
-    "q149_bm25" -> bm25Search,
-    "q150_bpe_merges" -> bpeMerges,
-    "q148_hard_negatives" -> hardNegativeMining,
-    "q147_semdedup" -> semDedupDecisions,
-    "q146_curation_decisions" -> curationDecisions,
-    "q145_collection_surface" -> collectionSurface,
-    "q140_rep_ngrams" -> repNGrams,
-    "q141_split_leakage" -> splitLeakage,
-    "q142_dataset_card" -> datasetCard,
-    "q143_ivf_recall" -> ivfRecall,
-    "q144_ivf_probe_sweep" -> ivfProbeSweep,
-    "q207_ann_ranking_quality" -> annRankingQuality,
-    "q224_rbo" -> rboQuality,
-    "q40_dedup_exact" -> dedupExact,
-    "q41_fingerprint" -> fingerprint,
-    "q42_ngram_jaccard" -> ngramJaccard,
-    "q43_minhash_lsh" -> minhashLsh,
-    "q44_simhash" -> simhash,
-    "q45_embed_neardup" -> embedNearDup,
-    "q52_dedup_clusters" -> dedupClusters,
-    "q53_embed_clusters" -> embedClusters,
-    "q46_ann_bruteforce" -> annBruteForce,
-    "q47_ann_lsh" -> annLsh,
-    "q65_ann_ivf" -> annIvf,
-    "q48_lang_id" -> langId,
-    "q49_text_quality" -> textQuality,
-    "q50_token_count" -> tokenCount,
-    "q51_multimodal_meta" -> multimodalMeta,
-    "q66_frame_sample" -> frameSample,
-    "q67_embed_centroids" -> embedCentroids,
-    "q68_hash_sample" -> hashSample,
-    "q69_split_assign" -> splitAssign,
-    "q70_text_clean" -> textClean,
-    "q82_repetition" -> repetition,
-    "q83_stratified_sample" -> stratified,
-    "q84_bloom_semi_join" -> bloomSemi,
-    "q85_tfidf" -> tfidf,
-    "q86_bigram_lm" -> bigramLm,
-    "q87_pack_sequences" -> packSeqs,
-    "q88_token_chunks" -> chunks,
-    "q89_quantize_int8" -> quantize,
-    "q94_fuzzy_pairs" -> fuzzyPairs,
-    "q95_contamination" -> contamination,
-    "q96_pmi_collocations" -> pmi,
-    "q98_char_entropy" -> entropy,
-    "q99_vector_stats" -> vecStats,
-    "q100_quality_gate" -> qualityGate,
-    "q101_pagerank" -> pagerank,
-    "q102_variant_shred" -> variantShred,
-    "q103_containment" -> containment,
-    "q104_weighted_sample" -> weightedSample,
-    "q105_canonical_keep" -> canonicalKeep,
-    "q109_dim_stats" -> dimStats,
-    "q110_zipf_fit" -> zipf,
-    "q111_lsh_recall" -> lshRecall,
-    "q113_cms_heavy_hitters" -> cmsHeavyHitters,
-    "q114_dup_spans" -> dupSpans,
-    "q115_inverted_index" -> invertedIndex,
-    "q116_key_skew" -> keySkew,
-    "q123_mixture" -> mixture,
-    "q124_vocab_coverage" -> vocabCoverage,
-    "q126_expectations" -> expectationsGate,
-    "q129_top_pc" -> topPc,
-    "q130_novelty" -> novelty,
-    "q131_incremental_dedup" -> incrementalDedup,
-    "q132_triangles" -> triangleStats,
-    "q133_dedup_funnel" -> dedupFunnel,
-    "q233_epoch_allocation" -> epochAllocationQ,
-    "q234_k_anonymity" -> kAnonymityQ,
-    "q235_index_maintenance" -> indexMaintenance,
-    "q134_crossmodal_agreement" -> crossModalAgreement,
-    "q136_threshold_sweep" -> thresholdSweep,
-    "q137_minhash_calibration" -> minhashCalibration)
-
   import graft.functions.{Vec => V}
   import TextAnalysis.{O => TO}
 
-  val oracle: Map[String, String] = Map(
-    "q195_damerau" -> Dedup.O.damerauPairs(),
-    "q194_jaro_winkler" -> Dedup.O.jaroWinklerPairs(),
-    "q222_entity_resolution" ->
+  val entries: Seq[Entry] = Seq(
+    Entry("q195_damerau", damerauPairs, Dedup.O.damerauPairs()),
+    Entry("q194_jaro_winkler", jaroWinklerPairs, Dedup.O.jaroWinklerPairs()),
+    Entry("q222_entity_resolution", entityResolution,
       s"""WITH RECURSIVE ${Dedup.O.jwPairsCtes()},
          |sym AS (SELECT d1 AS src, d2 AS dst FROM jwp UNION SELECT d2, d1 FROM jwp),
          |reach(src, dst) AS (
@@ -4187,8 +3942,8 @@ object PipelineQueries {
          |  CAST(COALESCE(e.entity_size, 1) AS BIGINT) AS entity_size,
          |  (COALESCE(e.entity_rep, d.doc_id) = d.doc_id) AS is_canonical
          |FROM documents d LEFT JOIN ent e USING (doc_id)
-         |ORDER BY d.doc_id""".stripMargin,
-    "q192_ann_hubness" ->
+         |ORDER BY d.doc_id""".stripMargin),
+    Entry("q192_ann_hubness", annHubness,
       s"""WITH occ AS (SELECT cand_id, COUNT(*) AS n_occ
          |  FROM (${Similarity.O.ivf(annAuditPredSql, 10)}) GROUP BY cand_id)
          |SELECT COUNT(*) AS n_distinct_candidates,
@@ -4197,8 +3952,8 @@ object PipelineQueries {
          |  round(${Num.O.avg("n_occ")}, 6) AS avg_occ,
          |  CAST(count_if(n_occ >= 5) AS BIGINT) AS n_hubs_5,
          |  CAST(count_if(n_occ = 1) AS BIGINT) AS n_singletons
-         |FROM occ""".stripMargin,
-    "q191_deletion_impact" ->
+         |FROM occ""".stripMargin),
+    Entry("q191_deletion_impact", deletionImpact,
       s"""WITH ds AS (SELECT doc_id,
          |             (${Sampling.O.hashBucket("doc_id")} >= $DeleteBucketFrom) AS deleted
          |           FROM documents),
@@ -4223,80 +3978,82 @@ object PipelineQueries {
          |  cs.n_clusters_touched, cs.n_clusters_reelected, cs.n_clusters_removed,
          |  ts.n_terms_touched, ts.n_terms_removed,
          |  round(b.n_deleted * 100.0 / b.n_docs, 6) AS pct_deleted
-         |FROM b, cs, ts""".stripMargin,
-    "q189_blocklist" -> TO.blocklistFilter(),
-    "q241_phrase_search" -> TO.phraseSearch(),
+         |FROM b, cs, ts""".stripMargin),
+    Entry("q189_blocklist", blocklist, TO.blocklistFilter()),
+    Entry("q241_phrase_search", phraseSearch, TO.phraseSearch()),
     // q248 reads the persisted posting artifact; the oracle re-derives
     // from scratch — identical SQL to q241 is exactly the point: the
     // hash gate proves artifact-reader ≡ re-deriver
-    "q248_phrase_indexed" -> TO.phraseSearch(),
+    Entry("q248_phrase_indexed", phraseSearchIndexed, TO.phraseSearch()),
     // q251/q252 read the persisted artifact too; their oracles re-derive
     // from the raw corpus (q252's is byte-identical to q149's — equality
     // of the two formulations is the point)
-    "q251_phrase_ngram" -> TO.phraseSearchN(),
-    "q252_bm25_indexed" -> TO.bm25TopK(),
-    "q255_term_proximity" -> TO.termProximity(),
-    "q256_abtt_cosine_shift" -> Clustering.O.abttCosineShift(),
-    "q257_min_window" -> TO.minWindowCover(),
-    "q258_min_window_snippets" -> TO.minWindowSnippets(),
-    "q259_dirichlet_ql" -> TO.dirichletQL(),
+    Entry("q251_phrase_ngram", phraseSearchNgram, TO.phraseSearchN()),
+    Entry("q252_bm25_indexed", bm25Indexed, TO.bm25TopK()),
+    Entry("q255_term_proximity", termProximity, TO.termProximity()),
+    Entry("q256_abtt_cosine_shift", abttCosineShift, Clustering.O.abttCosineShift()),
+    Entry("q257_min_window", minWindow, TO.minWindowCover()),
+    Entry("q258_min_window_snippets", minWindowSnippets, TO.minWindowSnippets()),
+    Entry("q259_dirichlet_ql", dirichletQl, TO.dirichletQL()),
     // q260 unions the disk artifact with a freshly-tokenized delta; the
     // oracle is q251's from-scratch SQL — identical results ARE the
     // (artifact ∪ delta) ≡ re-derivation proof
-    "q260_incremental_postings" -> TO.phraseSearchN(),
-    "q261_hybrid_text_rrf" -> TO.hybridRrf(),
+    Entry("q260_incremental_postings", incrementalPostings, TO.phraseSearchN()),
+    Entry("q261_hybrid_text_rrf", hybridTextRrf, TO.hybridRrf()),
     // q262: both rankings re-derived from scratch (corpus tokenization
     // for BM25, the full Lloyd-trajectory replay for IVF) — identical
     // results prove index-reader ≡ re-deriver across the hybrid stack
-    "q262_hybrid_dense_lexical" -> hybridOracleSql,
+    Entry("q262_hybrid_dense_lexical", hybridDenseLexical, hybridOracleSql),
     // q267 deliberately shares it: (base index ∪ delta) on BOTH sides
     // must hash-match the from-scratch hybrid — the no-rebuild proof
     // for the whole pipeline
-    "q267_hybrid_incremental" -> hybridOracleSql,
-    "q263_abtt_topd" -> Clustering.O.abttTopD(),
+    Entry("q267_hybrid_incremental", hybridIncremental, hybridOracleSql),
+    Entry("q263_abtt_topd", abttTopD, Clustering.O.abttTopD()),
     // q264 deliberately shares q65's oracle: the stored-inverted-list
     // reader must hash-match the from-scratch trajectory replay
-    "q264_ann_ivf_indexed" -> Similarity.O.ivf("vec_id < 20", k = 5),
-    "q265_global_packing" -> Corpus.O.globalPackingCensus(),
+    Entry("q264_ann_ivf_indexed", annIvfIndexed, Similarity.O.ivf("vec_id < 20", k = 5)),
+    Entry("q265_global_packing", globalPacking, Corpus.O.globalPackingCensus()),
     // q266 shares the q65/q264 from-scratch oracle: (stored base lists
     // ∪ freshly-assigned delta) must hash-match a full re-assignment
-    "q266_ann_ivf_incremental" -> Similarity.O.ivf("vec_id < 20", k = 5),
+    Entry("q266_ann_ivf_incremental", annIvfIncremental, Similarity.O.ivf("vec_id < 20", k = 5)),
     // q268: the oracle rebuilds the index from scratch WITHOUT the
     // erased cohort — hash-match proves anti-filter-on-read ≡ rebuild
-    "q268_ann_ivf_deletion" ->
-      Similarity.O.ivf("vec_id < 20", k = 5, candPredSql = "(vec_id % 7) <> 3"),
-    "q269_ann_list_sizes" -> Similarity.O.ivfListSizes(),
+    Entry("q268_ann_ivf_deletion", annIvfDeletion,
+      Similarity.O.ivf("vec_id < 20", k = 5, candPredSql = "(vec_id % 7) <> 3")),
+    Entry("q269_ann_list_sizes", annListSizes, Similarity.O.ivfListSizes()),
     // q270: the oracle re-tokenizes the SURVIVING corpus from scratch —
     // anti-filter on the artifact ≡ rebuild without the erased docs
-    "q270_text_deletion" ->
-      TextAnalysis.O.bm25TopK(docPredSql = "(doc_id % 7) <> 3"),
+    Entry("q270_text_deletion", textDeletion,
+      TextAnalysis.O.bm25TopK(docPredSql = "(doc_id % 7) <> 3")),
     // q271/q272 share the from-scratch oracles of their index families:
     // compacted-store reader ≡ full re-derivation, one hash gate
-    "q271_ivf_compacted" -> Similarity.O.ivf("vec_id < 20", k = 5),
-    "q272_text_compacted" -> TextAnalysis.O.bm25TopK(),
+    Entry("q271_ivf_compacted", annIvfCompacted, Similarity.O.ivf("vec_id < 20", k = 5)),
+    Entry("q272_text_compacted", textCompacted, TextAnalysis.O.bm25TopK()),
     // q273/q274: the oracle rebuilds each index from scratch WITHOUT the
     // tombstoned cohort — anti-join + physical purge ≡ rebuild
-    "q273_ivf_tombstoned" -> Similarity.O.ivf("vec_id < 20", k = 5,
-      candPredSql = "vec_id NOT IN (SELECT vec_id FROM embeddings WHERE label = 7)"),
-    "q274_text_tombstoned" -> TextAnalysis.O.bm25TopK(
-      docPredSql = "doc_id NOT IN (SELECT doc_id FROM documents WHERE lang = 'de')"),
-    "q275_retrain_recall" -> Similarity.O.retrainRecall(IncrementalSplit, DriftScale),
-    "q276_ann_filtered" -> Similarity.O.ivf("vec_id < 20", k = 5, probes = FilteredAnnProbes,
-      candPredSql = "vec_id IN (SELECT vec_id FROM embeddings WHERE label IN (1, 4, 7))"),
-    "q277_ann_filtered_recall" -> Similarity.O.filteredRecall(
-      "vec_id < 20", "label IN (1, 4, 7)", k = 10, probes = FilteredAnnProbes),
+    Entry("q273_ivf_tombstoned", annIvfTombstoned, Similarity.O.ivf("vec_id < 20", k = 5,
+      candPredSql = "vec_id NOT IN (SELECT vec_id FROM embeddings WHERE label = 7)")),
+    Entry("q274_text_tombstoned", textTombstoned, TextAnalysis.O.bm25TopK(
+      docPredSql = "doc_id NOT IN (SELECT doc_id FROM documents WHERE lang = 'de')")),
+    Entry("q275_retrain_recall", retrainRecall,
+      Similarity.O.retrainRecall(IncrementalSplit, DriftScale)),
+    Entry("q276_ann_filtered", annFiltered,
+      Similarity.O.ivf("vec_id < 20", k = 5, probes = FilteredAnnProbes,
+        candPredSql = "vec_id IN (SELECT vec_id FROM embeddings WHERE label IN (1, 4, 7))")),
+    Entry("q277_ann_filtered_recall", annFilteredRecall, Similarity.O.filteredRecall(
+      "vec_id < 20", "label IN (1, 4, 7)", k = 10, probes = FilteredAnnProbes)),
     // q278: both rankings rebuilt from scratch over the SURVIVING
     // corpora — lived-in stores (fragments + purge + compaction) ≡
     // tombstone-filtered full re-derivation, one hash gate
-    "q278_hybrid_lifecycle" -> hybridOracle(
+    Entry("q278_hybrid_lifecycle", hybridLifecycle, hybridOracle(
       TextAnalysis.O.bm25TopK(
         docPredSql = "doc_id NOT IN (SELECT doc_id FROM documents WHERE lang = 'de')"),
       Similarity.O.ivf(s"vec_id = $HybridQueryVec", k = 20,
-        candPredSql = "vec_id NOT IN (SELECT vec_id FROM embeddings WHERE label = 7)")),
-    "q279_kneser_ney" -> TO.knBigramScores("NOT (source = 'src0')"),
-    "q280_ann_adaptive" ->
-      Similarity.O.adaptive("vec_id < 20", k = 10, d = AdaptiveDim, m = AdaptiveM),
-    "q281_adaptive_recall" -> {
+        candPredSql = "vec_id NOT IN (SELECT vec_id FROM embeddings WHERE label = 7)"))),
+    Entry("q279_kneser_ney", knScores, TO.knBigramScores("NOT (source = 'src0')")),
+    Entry("q280_ann_adaptive", annAdaptive,
+      Similarity.O.adaptive("vec_id < 20", k = 10, d = AdaptiveDim, m = AdaptiveM)),
+    Entry("q281_adaptive_recall", adaptiveRecall, {
       val exTop =
         s"""SELECT query_id, cand_id FROM (
            |  SELECT q.vec_id AS query_id, c.vec_id AS cand_id,
@@ -4325,10 +4082,10 @@ object PipelineQueries {
          |SELECT * FROM (
          |$rows
          |) ORDER BY m""".stripMargin
-    },
+    }),
     // q282: Lloyd-trajectory assignment replay + the c-TF-IDF scoring,
     // round-then-rank with the term tie-break in both engines
-    "q282_cluster_topics" ->
+    Entry("q282_cluster_topics", clusterTopicsQ,
       s"""WITH ${Similarity.O.assignmentCtes},
          |tk AS (SELECT doc_id, unnest(string_split(text, ' ')) AS term FROM documents),
          |tfc AS MATERIALIZED (SELECT a.cent_id, tk.term, COUNT(*) AS tf
@@ -4342,11 +4099,11 @@ object PipelineQueries {
          |  SELECT cent_id, term, tf, ctfidf,
          |    row_number() OVER (PARTITION BY cent_id ORDER BY ctfidf DESC, term) AS rank
          |  FROM scored)
-         |WHERE rank <= 3 ORDER BY cent_id, rank""".stripMargin,
-    "q283_soft_dedup" -> Dedup.O.softDedupWeights,
+         |WHERE rank <= 3 ORDER BY cent_id, rank""".stripMargin),
+    Entry("q283_soft_dedup", softDedupQ, Dedup.O.softDedupWeights),
     // q284: full KN replay + exact tercile cutoffs (quantile_cont ≡
     // percentile, rounded to 6 BEFORE bucketing — the q27 convention)
-    "q284_ccnet_buckets" ->
+    Entry("q284_ccnet_buckets", ccnetBuckets,
       s"""WITH kn AS MATERIALIZED (${TO.knBigramScores("NOT (source = 'src0')")}),
          |b AS (SELECT kn.doc_id, kn.kn_avg_logprob,
          |        CAST(len(string_split(d.text, ' ')) AS INT) AS n_tokens
@@ -4360,64 +4117,66 @@ object PipelineQueries {
          |t AS (SELECT CAST(SUM(n_tokens) AS BIGINT) AS tot FROM w)
          |SELECT bucket, COUNT(*) AS n_docs, CAST(SUM(n_tokens) AS BIGINT) AS n_tokens,
          |  round(CAST(SUM(n_tokens) AS DOUBLE) / tot, 6) AS token_share
-         |FROM w CROSS JOIN t GROUP BY bucket, tot ORDER BY bucket""".stripMargin,
-    "q285_knn_shapley" -> Similarity.O.knnShapley(annAuditPredSql, k = 5),
-    "q286_rm3_expansion" -> TO.rm3Weights(),
-    "q287_rm3_rerank" -> TO.rm3Rerank(),
-    "q288_query_clarity" -> TO.clarityScore(),
-    "q289_percolator" -> TO.percolateCensus(),
-    "q290_linear_shap" -> Classifier.O.shapAttributions("source = 'src0'"),
-    "q291_psi_drift" -> Classifier.O.psiDrift("source = 'src0'",
-      s"${Sampling.O.hashBucket("doc_id")} < 50"),
-    "q292_calibration" -> Classifier.O.calibrationCurve("source = 'src0'"),
-    "q293_percolator_bool" -> TO.percolateBoolCensus(),
-    "q294_substring_removal" -> Dedup.O.substringRemoval(),
-    "q295_bleu_pairs" -> TO.bleuPairs(),
-    "q296_rouge_pairs" -> TO.rougePairs(),
-    "q297_readability" -> TO.readability(),
-    "q298_diversity" -> Sampling.O.diversityCensus(),
-    "q299_training_order" -> Corpus.O.trainingOrder(),
-    "q300_curriculum_order" -> Corpus.O.curriculumOrder(),
-    "q301_novelty_curve" -> Corpus.O.noveltyCurve(),
-    "q302_substring_gate" -> Dedup.O.substringGate(s"doc_id < $IncrementalSplit"),
-    "q303_systematic_resample" -> Sampling.O.systematicResample(),
-    "q304_lsh_tuning" -> Dedup.O.lshTuningCurve(),
-    "q305_mixture_interleave" -> Corpus.O.mixtureInterleave(),
-    "q306_kn_localize" -> TO.knWindowLocalize("NOT (source = 'src0')"),
-    "q307_rouge_l" -> TO.rougeLPairs(),
-    "q309_chrf" -> TO.chrfPairs(),
+         |FROM w CROSS JOIN t GROUP BY bucket, tot ORDER BY bucket""".stripMargin),
+    Entry("q285_knn_shapley", knnShapleyQ, Similarity.O.knnShapley(annAuditPredSql, k = 5)),
+    Entry("q286_rm3_expansion", rm3Expansion, TO.rm3Weights()),
+    Entry("q287_rm3_rerank", rm3Reranked, TO.rm3Rerank()),
+    Entry("q288_query_clarity", clarityQ, TO.clarityScore()),
+    Entry("q289_percolator", percolatorQ, TO.percolateCensus()),
+    Entry("q290_linear_shap", shapQ, Classifier.O.shapAttributions("source = 'src0'")),
+    Entry("q291_psi_drift", psiQ, Classifier.O.psiDrift("source = 'src0'",
+      s"${Sampling.O.hashBucket("doc_id")} < 50")),
+    Entry("q292_calibration", calibrationQ, Classifier.O.calibrationCurve("source = 'src0'")),
+    Entry("q293_percolator_bool", percolatorBoolQ, TO.percolateBoolCensus()),
+    Entry("q294_substring_removal", substringRemovalQ, Dedup.O.substringRemoval()),
+    Entry("q295_bleu_pairs", bleuPairsQ, TO.bleuPairs()),
+    Entry("q296_rouge_pairs", rougePairsQ, TO.rougePairs()),
+    Entry("q297_readability", readabilityQ, TO.readability()),
+    Entry("q298_diversity", diversityQ, Sampling.O.diversityCensus()),
+    Entry("q299_training_order", trainingOrderQ, Corpus.O.trainingOrder()),
+    Entry("q300_curriculum_order", curriculumOrderQ, Corpus.O.curriculumOrder()),
+    Entry("q301_novelty_curve", noveltyCurveQ, Corpus.O.noveltyCurve()),
+    Entry("q302_substring_gate", substringGateQ,
+      Dedup.O.substringGate(s"doc_id < $IncrementalSplit")),
+    Entry("q303_systematic_resample", systematicResampleQ, Sampling.O.systematicResample()),
+    Entry("q304_lsh_tuning", lshTuningQ, Dedup.O.lshTuningCurve()),
+    Entry("q305_mixture_interleave", mixtureInterleaveQ, Corpus.O.mixtureInterleave()),
+    Entry("q306_kn_localize", knWindowLocalizeQ, TO.knWindowLocalize("NOT (source = 'src0')")),
+    Entry("q307_rouge_l", rougeLQ, TO.rougeLPairs()),
+    Entry("q309_chrf", chrfQ, TO.chrfPairs()),
     // q310 shares q302's from-scratch oracle shape at the moved split:
     // lived-in store (fragment + compaction) ≡ gram set of docs < 450
-    "q310_gram_store_gate" -> Dedup.O.substringGate(s"doc_id < $FragmentSplit"),
-    "q311_wer" -> TO.werPairs(),
+    Entry("q310_gram_store_gate", gramStoreGateQ,
+      Dedup.O.substringGate(s"doc_id < $FragmentSplit")),
+    Entry("q311_wer", werQ, TO.werPairs()),
     // q312: rebased store ≡ gram set of the SURVIVING pre-B corpus;
     // the delta stays the full B batch (erasure isn't its complement)
-    "q312_gram_store_erased" -> Dedup.O.substringGate(
+    Entry("q312_gram_store_erased", gramStoreErasedQ, Dedup.O.substringGate(
       s"doc_id < $FragmentSplit AND lang <> 'de'",
-      deltaPredSql = Some(s"doc_id >= $FragmentSplit")),
-    "q313_source_dup_burden" ->
+      deltaPredSql = Some(s"doc_id >= $FragmentSplit"))),
+    Entry("q313_source_dup_burden", sourceDupBurdenQ,
       s"""SELECT d.source, COUNT(*) AS n_docs,
          |  CAST(SUM(r.n_tokens) AS BIGINT) AS n_tokens,
          |  CAST(SUM(r.n_removed) AS BIGINT) AS n_removed,
          |  round(CAST(SUM(r.n_removed) AS DOUBLE) / SUM(r.n_tokens), 6) AS removed_share
          |FROM (${Dedup.O.substringRemoval()}) r
          |JOIN documents d USING (doc_id)
-         |GROUP BY d.source ORDER BY d.source""".stripMargin,
-    "q314_boilerplate_flow" -> Dedup.O.boilerplateFlow(),
-    "q315_metric_agreement" -> TO.metricAgreement(),
-    "q318_fim_examples" -> Corpus.O.fimExamples(),
-    "q320_phrase_percolator" -> TO.percolatePhraseCensus(),
-    "q321_shapley_capped" -> Similarity.O.knnShapleyCapped(n = 40, k = 5),
-    "q322_percolator_table" -> TO.percolateTableCensus(),
-    "q328_phrase_table" -> TO.percolatePhraseTableCensus(),
-    "q329_bbit_minhash" -> Dedup.O.bbitMinhashPairs(b = 2),
-    "q332_passage_maxp" -> TO.passageMaxP(),
-    "q333_binary_incremental" ->
-      Similarity.O.binaryTopK("vec_id < 20", k = 10, m = BinaryM),
-    "q336_wig" -> TO.wigScore(),
-    "q337_burstiness" -> TO.termBurstiness(),
-    "q338_percolator_bool_table" -> TO.percolateBoolTableCensus(),
-    "q339_weighted_label_prop" ->
+         |GROUP BY d.source ORDER BY d.source""".stripMargin),
+    Entry("q314_boilerplate_flow", boilerplateFlowQ, Dedup.O.boilerplateFlow()),
+    Entry("q315_metric_agreement", metricAgreementQ, TO.metricAgreement()),
+    Entry("q318_fim_examples", fimQ, Corpus.O.fimExamples()),
+    Entry("q320_phrase_percolator", phrasePercolatorQ, TO.percolatePhraseCensus()),
+    Entry("q321_shapley_capped", knnShapleyCappedQ, Similarity.O.knnShapleyCapped(n = 40, k = 5)),
+    Entry("q322_percolator_table", percolatorTableQ, TO.percolateTableCensus()),
+    Entry("q328_phrase_table", phraseTableQ, TO.percolatePhraseTableCensus()),
+    Entry("q329_bbit_minhash", bbitMinhashQ, Dedup.O.bbitMinhashPairs(b = 2)),
+    Entry("q332_passage_maxp", passageMaxPQ, TO.passageMaxP()),
+    Entry("q333_binary_incremental", binaryIncremental,
+      Similarity.O.binaryTopK("vec_id < 20", k = 10, m = BinaryM)),
+    Entry("q336_wig", wigQ, TO.wigScore()),
+    Entry("q337_burstiness", burstinessQ, TO.termBurstiness()),
+    Entry("q338_percolator_bool_table", percolatorBoolTableQ, TO.percolateBoolTableCensus()),
+    Entry("q339_weighted_label_prop", labelPropWeightedQ,
       s"""WITH ${Similarity.O.bucketedWeightedPairsCte(0.15)},
          |edges AS (SELECT v1 AS src, v2 AS dst, w FROM pairs
          |          UNION ALL SELECT v2, v1, w FROM pairs),
@@ -4430,11 +4189,11 @@ object PipelineQueries {
          |SELECT n.id, n.is_seed, l3.lbl AS pred_label, em.label AS true_label,
          |  CASE WHEN l3.lbl IS NOT NULL THEN l3.lbl = em.label END AS correct
          |FROM nl n JOIN l3 ON l3.id = n.id JOIN embeddings em ON em.vec_id = n.id
-         |ORDER BY n.id""".stripMargin,
-    "q340_perc_store_census" -> TO.percStoreCensus(),
-    "q341_perc_store_travel" -> TO.percStoreTravel(),
-    "q344_perc_store_diff" -> TO.percStoreDiff(),
-    "q345_label_noise" ->
+         |ORDER BY n.id""".stripMargin),
+    Entry("q340_perc_store_census", percStoreCensusQ, TO.percStoreCensus()),
+    Entry("q341_perc_store_travel", percStoreTravelQ, TO.percStoreTravel()),
+    Entry("q344_perc_store_diff", percStoreDiffQ, TO.percStoreDiff()),
+    Entry("q345_label_noise", labelNoiseQ,
       s"""WITH ${Similarity.O.bucketedCrossPairsCte(0.15)},
          |e AS (SELECT v1 AS id, v2 AS nb FROM pairs UNION ALL SELECT v2, v1 FROM pairs),
          |nbl AS MATERIALIZED (SELECT e.id, own.label, x.label AS nb_label
@@ -4453,8 +4212,8 @@ object PipelineQueries {
          |  m.majority_label,
          |  (round(CAST(a.n_disagree AS DOUBLE) / CAST(a.n_neighbors AS DOUBLE), 6) >= 0.5
          |   AND m.majority_label != a.label) AS suspect
-         |FROM agg a JOIN maj m USING (id) ORDER BY a.id""".stripMargin,
-    "q342_kendall_tau" ->
+         |FROM agg a JOIN maj m USING (id) ORDER BY a.id""".stripMargin),
+    Entry("q342_kendall_tau", kendallTauQ,
       s"""WITH sem AS (SELECT query_id, cand_id, rank AS sem_rank FROM (
          |  SELECT q.vec_id AS query_id, c.vec_id AS cand_id,
          |    CAST(row_number() OVER (PARTITION BY q.vec_id
@@ -4491,8 +4250,8 @@ object PipelineQueries {
          |       ELSE round(CAST(COALESCE(p.concordant, 0) - COALESCE(p.discordant, 0) AS DOUBLE)
          |                  / CAST((n.n_common * (n.n_common - 1)) // 2 AS DOUBLE), 6) END AS tau
          |FROM ids i LEFT JOIN n USING (query_id) LEFT JOIN p USING (query_id)
-         |ORDER BY i.query_id""".stripMargin,
-    "q343_mixture_plan" ->
+         |ORDER BY i.query_id""".stripMargin),
+    Entry("q343_mixture_plan", mixturePlanQ,
       """WITH d AS (SELECT source, len(string_split(text, ' ')) AS n_tokens FROM documents),
         |tk AS (SELECT source, CAST(SUM(n_tokens) AS BIGINT) AS n_tokens FROM d GROUP BY 1),
         |tt AS (SELECT CAST(SUM(n_tokens) AS BIGINT) AS t FROM tk),
@@ -4504,16 +4263,16 @@ object PipelineQueries {
         |SELECT source, n_tokens, round(share, 6) AS share,
         |  round(w_raw / z, 6) AS mix_weight,
         |  round(4.0 * CAST(t AS DOUBLE) * (w_raw / z) / CAST(n_tokens AS DOUBLE), 6) AS epochs
-        |FROM wr CROSS JOIN z ORDER BY source""".stripMargin,
-    "q335_mann_whitney" -> Robust.O.mannWhitney(
-      s"mwd AS (SELECT source AS g, quality_score AS v FROM (SELECT source, ${TO.textStats} FROM documents))"),
-    "q334_cluster_split" ->
+        |FROM wr CROSS JOIN z ORDER BY source""".stripMargin),
+    Entry("q335_mann_whitney", mannWhitneyQ, Robust.O.mannWhitney(
+      s"mwd AS (SELECT source AS g, quality_score AS v FROM (SELECT source, ${TO.textStats} FROM documents))")),
+    Entry("q334_cluster_split", clusterSplitQ,
       s"""${Dedup.O.clusterRepCtes}
          |SELECT d.doc_id, COALESCE(cl.cluster_rep, d.doc_id) AS split_key,
          |  ${Sampling.O.split("COALESCE(cl.cluster_rep, d.doc_id)")} AS split
          |FROM documents d LEFT JOIN cl USING (doc_id)
-         |ORDER BY d.doc_id""".stripMargin,
-    "q330_err_at_10" ->
+         |ORDER BY d.doc_id""".stripMargin),
+    Entry("q330_err_at_10", errQ,
       s"""WITH ex AS MATERIALIZED (SELECT query_id, cand_id FROM (
          |  SELECT q.vec_id AS query_id, c.vec_id AS cand_id,
          |    CAST(row_number() OVER (PARTITION BY q.vec_id
@@ -4533,8 +4292,8 @@ object PipelineQueries {
          |        FROM fl)
          |SELECT query_id, CAST(SUM(rel) AS BIGINT) AS n_rel,
          |  round(${Num.O.sum("CASE WHEN rel = 1 THEN pow(0.5, cb + 1) / arank ELSE CAST(0 AS DOUBLE) END")}, 6) AS err_at_10
-         |FROM cbt GROUP BY query_id ORDER BY query_id""".stripMargin,
-    "q331_silhouette" ->
+         |FROM cbt GROUP BY query_id ORDER BY query_id""".stripMargin),
+    Entry("q331_silhouette", silhouetteQ,
       s"""WITH ${Similarity.O.assignmentCtes},
          |pts AS MATERIALIZED (SELECT e.vec_id, e.embedding, e.nrm, a.cent_id
          |  FROM e JOIN asg a ON a.doc_id = e.vec_id),
@@ -4555,15 +4314,15 @@ object PipelineQueries {
          |       ELSE CAST(0.0 AS DOUBLE) END AS silhouette
          |FROM (SELECT sid, scent FROM sp) s
          |LEFT JOIN aa USING (sid) LEFT JOIN bb USING (sid)
-         |ORDER BY vec_id""".stripMargin,
-    "q326_kcore" ->
+         |ORDER BY vec_id""".stripMargin),
+    Entry("q326_kcore", kCoreQ,
       s"""WITH ${Similarity.O.bucketedPairsCte(0.15)},
          |edges AS (SELECT v1 AS src, v2 AS dst FROM pairs UNION ALL SELECT v2, v1 FROM pairs),
          |${Graph.O.kCoreCtes(k = KCoreK, rounds = 15)}
          |SELECT e.src AS id, CAST(COUNT(*) AS BIGINT) AS core_deg
          |FROM edges e JOIN al15 a ON a.id = e.src JOIN al15 b ON b.id = e.dst
-         |GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q327_label_prop" ->
+         |GROUP BY 1 ORDER BY 1""".stripMargin),
+    Entry("q327_label_prop", labelPropQ,
       s"""WITH ${Similarity.O.bucketedPairsCte(0.15)},
          |edges AS (SELECT v1 AS src, v2 AS dst FROM pairs UNION ALL SELECT v2, v1 FROM pairs),
          |nodes AS (SELECT DISTINCT src AS id FROM edges),
@@ -4575,10 +4334,10 @@ object PipelineQueries {
          |SELECT n.id, n.is_seed, l3.lbl AS pred_label, em.label AS true_label,
          |  CASE WHEN l3.lbl IS NOT NULL THEN l3.lbl = em.label END AS correct
          |FROM nl n JOIN l3 ON l3.id = n.id JOIN embeddings em ON em.vec_id = n.id
-         |ORDER BY n.id""".stripMargin,
-    "q324_binary_ann" ->
-      Similarity.O.binaryTopK("vec_id < 20", k = 10, m = BinaryM),
-    "q325_binary_recall" -> {
+         |ORDER BY n.id""".stripMargin),
+    Entry("q324_binary_ann", annBinary,
+      Similarity.O.binaryTopK("vec_id < 20", k = 10, m = BinaryM)),
+    Entry("q325_binary_recall", binaryRecall, {
       val exTop =
         s"""SELECT query_id, cand_id FROM (
            |  SELECT q.vec_id AS query_id, c.vec_id AS cand_id,
@@ -4605,16 +4364,16 @@ object PipelineQueries {
          |         CAST(COUNT(*) AS BIGINT) AS n_exact_pairs FROM ex),
          |$hits
          |SELECT * FROM ($rows) ORDER BY m""".stripMargin
-    },
-    "q323_hits" ->
+    }),
+    Entry("q323_hits", hitsQ,
       s"""WITH ${Similarity.O.bucketedPairsCte(0.15)},
          |edges AS (SELECT v2 AS src, v1 AS dst FROM pairs),
          |nodes AS (SELECT DISTINCT src AS id FROM edges UNION SELECT dst FROM edges),
          |${Graph.O.hitsCtes(iters = 5)}
          |SELECT h5.id, round(h5.h / 1000000.0, 6) AS hub,
          |  round(a5.a / 1000000.0, 6) AS authority
-         |FROM h5 JOIN a5 ON a5.id = h5.id ORDER BY h5.id""".stripMargin,
-    "q319_spam_mass" ->
+         |FROM h5 JOIN a5 ON a5.id = h5.id ORDER BY h5.id""".stripMargin),
+    Entry("q319_spam_mass", spamMassQ,
       s"""WITH ${Similarity.O.bucketedPairsCte(0.15)},
          |edges AS (SELECT v1 AS src, v2 AS dst FROM pairs UNION ALL SELECT v2, v1 FROM pairs),
          |deg AS (SELECT src, COUNT(*) AS deg FROM edges GROUP BY 1),
@@ -4636,8 +4395,8 @@ object PipelineQueries {
          |  round(t5.m / 1000000.0, 6) AS trust,
          |  round((r5.m / 1000000.0 - t5.m / 1000000.0) / (r5.m / 1000000.0), 6) AS spam_mass
          |FROM r5 JOIN t5 ON t5.id = r5.id JOIN ni ON ni.id = r5.id
-         |ORDER BY r5.id""".stripMargin,
-    "q317_modularity" ->
+         |ORDER BY r5.id""".stripMargin),
+    Entry("q317_modularity", modularityQ,
       s"""WITH ${Similarity.O.assignmentCtes},
          |${Similarity.O.bucketedPairsCte(0.15)},
          |ej AS (SELECT a1.cent_id AS c1, a2.cent_id AS c2 FROM pairs p
@@ -4652,8 +4411,8 @@ object PipelineQueries {
          |  round(CAST(COALESCE(ii.internal_edges, 0) AS DOUBLE) / mm.m_edges
          |    - (CAST(dd.degree_sum AS DOUBLE) / (2 * mm.m_edges))
          |      * (CAST(dd.degree_sum AS DOUBLE) / (2 * mm.m_edges)), 6) AS q_contribution
-         |FROM dd LEFT JOIN ii USING (cent_id) CROSS JOIN mm ORDER BY cent_id""".stripMargin,
-    "q316_trust_rank" ->
+         |FROM dd LEFT JOIN ii USING (cent_id) CROSS JOIN mm ORDER BY cent_id""".stripMargin),
+    Entry("q316_trust_rank", trustRankQ,
       s"""WITH ${Similarity.O.bucketedPairsCte(0.15)},
          |edges AS (SELECT v1 AS src, v2 AS dst FROM pairs UNION ALL SELECT v2, v1 FROM pairs),
          |deg AS (SELECT src, COUNT(*) AS deg FROM edges GROUP BY 1),
@@ -4672,8 +4431,8 @@ object PipelineQueries {
          |SELECT r5.id, t.is_seed, COALESCE(d.deg, 0) AS out_degree,
          |  r5.m / 1000000.0 AS trust
          |FROM r5 JOIN tele t ON t.id = r5.id
-         |LEFT JOIN deg d ON d.src = r5.id ORDER BY r5.id""".stripMargin,
-    "q308_dataset_card" -> {
+         |LEFT JOIN deg d ON d.src = r5.id ORDER BY r5.id""".stripMargin),
+    Entry("q308_dataset_card", datasetCardQ, {
       import graft.functions.Num
       s"""WITH ts AS (SELECT doc_id, ${TO.textStats} FROM documents),
          |basic AS (SELECT COUNT(*) AS n_docs,
@@ -4693,16 +4452,16 @@ object PipelineQueries {
          |        FROM (${Sampling.O.diversityCensus()}) WHERE dim = 'source')
          |SELECT * FROM basic CROSS JOIN dims CROSS JOIN dup
          |CROSS JOIN span CROSS JOIN div""".stripMargin
-    },
-    "q185_modality_stats" ->
+    }),
+    Entry("q185_modality_stats", modalityStats,
       s"""WITH ${Multimodal.O.payloadCtes}
          |SELECT modality, COUNT(*) AS n_docs,
          |  CAST(SUM(length(payload)) AS BIGINT) AS total_bytes,
          |  COUNT(DISTINCT md5(payload)) AS n_distinct_payloads,
          |  COUNT(*) - COUNT(DISTINCT md5(payload)) AS n_dup_docs,
          |  round(${Num.O.avg("length(payload)")}, 6) AS avg_bytes
-         |FROM m GROUP BY modality ORDER BY modality""".stripMargin,
-    "q186_byte_entropy" ->
+         |FROM m GROUP BY modality ORDER BY modality""".stripMargin),
+    Entry("q186_byte_entropy", byteEntropy,
       s"""WITH ${Multimodal.O.payloadCtes},
          |ch AS (SELECT doc_id, modality, least(length(payload), $PrefixBytes) AS plen,
          |         unnest(list_transform(range(1, least(length(payload), $PrefixBytes) + 1),
@@ -4716,15 +4475,15 @@ object PipelineQueries {
          |  round(${Num.O.avg("entropy")}, 6) AS avg_prefix_entropy,
          |  round(min(entropy), 6) AS min_prefix_entropy,
          |  round(max(entropy), 6) AS max_prefix_entropy
-         |FROM e GROUP BY modality ORDER BY modality""".stripMargin,
-    "q187_decode_features" ->
+         |FROM e GROUP BY modality ORDER BY modality""".stripMargin),
+    Entry("q187_decode_features", decodeFeatures,
       s"""SELECT doc_id, CAST(length(text) AS BIGINT) AS n_bytes,
          |  CAST(64 + (length(text) * 7) % 192 AS INT) AS width,
          |  CAST(64 + (length(text) * 13) % 128 AS INT) AS height,
          |  CAST(1 + length(text) % 8 AS INT) AS n_frames,
          |  CAST(${Multimodal.O.checksum("text")} AS BIGINT) AS checksum
-         |FROM documents ORDER BY doc_id""".stripMargin,
-    "q188_resize_plan" -> {
+         |FROM documents ORDER BY doc_id""".stripMargin),
+    Entry("q188_resize_plan", resizePlan, {
       val scale = "(CASE WHEN greatest(width, height) > 96 THEN 96.0 / greatest(width, height) ELSE 1.0 END)"
       s"""WITH d AS (SELECT doc_id,
          |    CAST(64 + (length(text) * 7) % 192 AS INT) AS width,
@@ -4734,13 +4493,14 @@ object PipelineQueries {
          |  CAST(floor(width * $scale) AS INT) AS out_width,
          |  CAST(floor(height * $scale) AS INT) AS out_height
          |FROM d ORDER BY doc_id""".stripMargin
-    },
-    "q237_dhash_neardup" -> Multimodal.O.dhashPairs(),
-    "q254_dhash_binary" -> Multimodal.O.dhashPairsBinary(),
-    "q239_dhash_incremental" -> Multimodal.O.dhashIncremental(IncrementalSplit),
-    "q245_dhash_clusters" -> Multimodal.O.dhashClusters(),
-    "q247_dhash_histogram" -> Multimodal.O.dhashCandidateHistogram(),
-    "q243_cluster_sample" -> {
+    }),
+    Entry("q237_dhash_neardup", dhashNearDup, Multimodal.O.dhashPairs()),
+    Entry("q254_dhash_binary", dhashBinary, Multimodal.O.dhashPairsBinary()),
+    Entry("q239_dhash_incremental", dhashIncremental,
+      Multimodal.O.dhashIncremental(IncrementalSplit)),
+    Entry("q245_dhash_clusters", dhashClusters, Multimodal.O.dhashClusters()),
+    Entry("q247_dhash_histogram", dhashHistogram, Multimodal.O.dhashCandidateHistogram()),
+    Entry("q243_cluster_sample", clusterSample, {
       val embSrc = "(SELECT vec_id, embedding FROM embeddings)"
       val h = graft.functions.Hashes.O.md5Long32("CAST(vec_id AS VARCHAR)")
       s"""WITH ${Similarity.O.kmeansL2Ctes("s", embSrc, Similarity.Dim)},
@@ -4757,8 +4517,8 @@ object PipelineQueries {
          |  CAST(rk.rn AS INT) AS sample_rank, rk.vec_id
          |FROM rk JOIN sz USING (cent_id) WHERE rn <= $SamplePerCluster
          |ORDER BY cluster_id, sample_rank""".stripMargin
-    },
-    "q238_persisted_index" -> {
+    }),
+    Entry("q238_persisted_index", persistedIndex, {
       val embSrc = "(SELECT vec_id, embedding FROM embeddings)"
       s"""WITH ${Similarity.O.kmeansL2Ctes("i", embSrc, Similarity.Dim)},
          |asg AS (SELECT vec_id, cent_id FROM (
@@ -4770,8 +4530,8 @@ object PipelineQueries {
          |SELECT ic.cent_id, CAST(COALESCE(n_vecs, 0) AS BIGINT) AS n_vecs
          |FROM (SELECT cent_id FROM icent) ic LEFT JOIN cnt USING (cent_id)
          |ORDER BY ic.cent_id""".stripMargin
-    },
-    "q184_stream_gate" ->
+    }),
+    Entry("q184_stream_gate", streamGateTwin,
       s"""WITH g AS (SELECT doc_id, n_words, pass_gopher FROM (${TO.gopherRules()})),
          |sc AS (SELECT doc_id, score AS domain_score, predicted_positive AS keep_domain
          |       FROM (${Classifier.O.scoreDocuments("source = 'src0'")})),
@@ -4780,8 +4540,8 @@ object PipelineQueries {
          |  sc.domain_score, sc.keep_domain,
          |  (g.pass_gopher AND sc.keep_domain) AS selected
          |FROM src JOIN g USING (doc_id) JOIN sc USING (doc_id)
-         |ORDER BY doc_id""".stripMargin,
-    "q183_embedding_qa" ->
+         |ORDER BY doc_id""".stripMargin),
+    Entry("q183_embedding_qa", embeddingQa,
       s"""WITH n AS (SELECT sqrt(${graft.functions.Vec.O.dot("embedding", "embedding")}) AS nrm,
          |             CAST(len(embedding) AS INT) AS dim,
          |             CAST(len(list_filter(embedding, x -> isnan(x))) AS INT) AS n_nan
@@ -4792,16 +4552,16 @@ object PipelineQueries {
          |  CAST(SUM(CASE WHEN n_nan > 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_with_nan,
          |  round(min(nrm), 6) AS min_norm, round(max(nrm), 6) AS max_norm,
          |  min(dim) AS min_dim, max(dim) AS max_dim
-         |FROM n""".stripMargin,
-    "q182_heaps_fit" -> TO.heapsFit,
-    "q180_quality_calibration" ->
+         |FROM n""".stripMargin),
+    Entry("q182_heaps_fit", heapsGrowth, TO.heapsFit),
+    Entry("q180_quality_calibration", qualityCalibration,
       s"""WITH s AS (SELECT doc_id, source, ${TO.textStats} FROM documents)
          |SELECT doc_id, source, quality_score,
          |  round(percent_rank() OVER w, 6) AS q_rank,
          |  (percent_rank() OVER w >= 0.5) AS selected_fair
          |FROM s WINDOW w AS (PARTITION BY source ORDER BY quality_score, doc_id)
-         |ORDER BY doc_id""".stripMargin,
-    "q181_distinct_ngrams" -> {
+         |ORDER BY doc_id""".stripMargin),
+    Entry("q181_distinct_ngrams", distinctNgrams, {
       val arms = (1 to 3).map { n =>
         s"""SELECT source, $n AS n, unnest(${graft.functions.Text.O.shingles("text", n)}) AS g
            |FROM w WHERE len(w) >= $n""".stripMargin
@@ -4812,11 +4572,11 @@ object PipelineQueries {
          |  COUNT(DISTINCT g) AS distinct_ngrams,
          |  round(CAST(COUNT(DISTINCT g) AS DOUBLE) / COUNT(*), 6) AS distinct_ratio
          |FROM g GROUP BY source, n ORDER BY source, n""".stripMargin
-    },
-    "q179_subword_tokens" -> Corpus.O.subwordTokenize(),
-    "q199_unigram_tokens" -> Corpus.O.unigramTokenize(),
-    "q200_unigram_vocab" -> Corpus.O.unigramVocab(),
-    "q201_signal_agreement" -> {
+    }),
+    Entry("q179_subword_tokens", subwordTokens, Corpus.O.subwordTokenize()),
+    Entry("q199_unigram_tokens", unigramTokens, Corpus.O.unigramTokenize()),
+    Entry("q200_unigram_vocab", unigramVocab, Corpus.O.unigramVocab()),
+    Entry("q201_signal_agreement", signalAgreement, {
       def ranks(p: String, sigCol: String) =
         s"""g$p AS (SELECT source, $sigCol AS v, COUNT(*) AS cnt FROM sig GROUP BY 1, 2),
            |c$p AS (SELECT source, v, cnt,
@@ -4840,10 +4600,10 @@ object PipelineQueries {
          |      FROM rk GROUP BY 1)
          |SELECT source, CAST(n AS BIGINT) AS n, round(${Num.O.fitCorr()}, 6) AS rho
          |FROM a ORDER BY source""".stripMargin
-    },
-    "q178_classifier_sampled" ->
-      Classifier.O.trainDomainClassifier("source = 'src0'", trainPct = 25),
-    "q177_curation_pipeline" ->
+    }),
+    Entry("q178_classifier_sampled", classifierSampled,
+      Classifier.O.trainDomainClassifier("source = 'src0'", trainPct = 25)),
+    Entry("q177_curation_pipeline", curationPipeline,
       s"""WITH st AS (SELECT doc_id, source, ${TO.textStats} FROM documents),
          |k AS (SELECT min(doc_id) AS doc_id FROM documents GROUP BY md5(text)),
          |g AS (SELECT doc_id, pass_gopher FROM (${TO.gopherRules()})),
@@ -4858,9 +4618,9 @@ object PipelineQueries {
          |  CAST(SUM(CASE WHEN is_unique AND pass_gopher THEN 1 ELSE 0 END) AS BIGINT) AS n_quality,
          |  CAST(SUM(CASE WHEN selected THEN 1 ELSE 0 END) AS BIGINT) AS n_selected,
          |  CAST(SUM(CASE WHEN selected THEN n_tokens ELSE 0 END) AS BIGINT) AS tokens_selected
-         |FROM j GROUP BY source ORDER BY source""".stripMargin,
-    "q176_kcenter_coreset" -> Similarity.O.kCenterCoreset(),
-    "q173_cross_source_dups" ->
+         |FROM j GROUP BY source ORDER BY source""".stripMargin),
+    Entry("q176_kcenter_coreset", kCenterCoreset, Similarity.O.kCenterCoreset()),
+    Entry("q173_cross_source_dups", crossSourceDups,
       """WITH d AS (SELECT DISTINCT source, md5(text) AS h FROM documents),
         |t AS (SELECT source, COUNT(*) AS n FROM d GROUP BY 1),
         |p AS (SELECT a.source AS src_a, b.source AS src_b, COUNT(*) AS c
@@ -4870,16 +4630,16 @@ object PipelineQueries {
         |  round(CAST(COALESCE(p.c, 0) AS DOUBLE) / (ta.n + tb.n - COALESCE(p.c, 0)), 6) AS hash_jaccard
         |FROM t ta JOIN t tb ON ta.source < tb.source
         |LEFT JOIN p ON p.src_a = ta.source AND p.src_b = tb.source
-        |ORDER BY 1, 2""".stripMargin,
-    "q174_length_distribution" ->
+        |ORDER BY 1, 2""".stripMargin),
+    Entry("q174_length_distribution", lengthDistribution,
       s"""SELECT source, COUNT(*) AS n_docs,
          |  round(quantile_cont(n_tokens, 0.5), 6) AS p50_tokens,
          |  round(quantile_cont(n_tokens, 0.9), 6) AS p90_tokens,
          |  round(quantile_cont(n_tokens, 0.99), 6) AS p99_tokens,
          |  max(n_tokens) AS max_tokens
          |FROM (SELECT source, ${TO.textStats} FROM documents)
-         |GROUP BY source ORDER BY source""".stripMargin,
-    "q175_scrub_audit" ->
+         |GROUP BY source ORDER BY source""".stripMargin),
+    Entry("q175_scrub_audit", scrubAudit,
       s"""WITH c AS (SELECT source, n_chars, ${TO.cleanText} AS clean_text FROM documents),
          |e AS (SELECT source, n_chars, length(clean_text) AS clean_len,
          |        CAST((length(clean_text) - length(replace(clean_text, '<email>', ''))) / 7 AS BIGINT) AS n_emails
@@ -4888,16 +4648,18 @@ object PipelineQueries {
          |  CAST(SUM(CASE WHEN n_emails > 0 THEN 1 ELSE 0 END) AS BIGINT) AS docs_with_email,
          |  CAST(SUM(n_emails) AS BIGINT) AS total_emails,
          |  CAST(SUM(CAST(n_chars - clean_len AS BIGINT)) AS BIGINT) AS chars_removed
-         |FROM e GROUP BY source ORDER BY source""".stripMargin,
-    "q168_gopher_rules" -> TO.gopherRules(),
-    "q169_standardize" -> Similarity.O.standardize,
-    "q170_mmr_rerank" -> Similarity.O.mmrTopK("q.vec_id < 20"),
-    "q171_domain_classifier" -> Classifier.O.trainDomainClassifier("source = 'src0'"),
-    "q172_classifier_scores" -> Classifier.O.scoreDocuments("source = 'src0'"),
-    "q219_conformal_gate" -> Classifier.O.conformalGate("source = 'src0'"),
-    "q228_classifier_cv" -> Classifier.O.crossValidate("source = 'src0'"),
-    "q229_learning_curve" -> Classifier.O.learningCurve("source = 'src0'"),
-    "q234_k_anonymity" ->
+         |FROM e GROUP BY source ORDER BY source""".stripMargin),
+    Entry("q168_gopher_rules", gopherRules, TO.gopherRules()),
+    Entry("q169_standardize", standardizeEmb, Similarity.O.standardize),
+    Entry("q170_mmr_rerank", mmrRerank, Similarity.O.mmrTopK("q.vec_id < 20")),
+    Entry("q171_domain_classifier", domainClassifier,
+      Classifier.O.trainDomainClassifier("source = 'src0'")),
+    Entry("q172_classifier_scores", classifierScores,
+      Classifier.O.scoreDocuments("source = 'src0'")),
+    Entry("q219_conformal_gate", conformalGate, Classifier.O.conformalGate("source = 'src0'")),
+    Entry("q228_classifier_cv", classifierCv, Classifier.O.crossValidate("source = 'src0'")),
+    Entry("q229_learning_curve", learningCurve, Classifier.O.learningCurve("source = 'src0'")),
+    Entry("q234_k_anonymity", kAnonymityQ,
       s"""WITH cls AS (SELECT source, lang, n_chars // 50 AS len_band, COUNT(*) AS csz
          |  FROM documents GROUP BY 1, 2, 3)
          |SELECT source, CAST(SUM(csz) AS BIGINT) AS n_docs, COUNT(*) AS n_classes,
@@ -4906,8 +4668,8 @@ object PipelineQueries {
          |  CAST(MIN(csz) AS BIGINT) AS min_class_size,
          |  round(CAST(SUM(CASE WHEN csz < 5 THEN csz ELSE 0 END) AS DOUBLE) * 100.0
          |    / CAST(SUM(csz) AS DOUBLE), 6) AS risk_pct
-         |FROM cls GROUP BY source ORDER BY source""".stripMargin,
-    "q235_index_maintenance" -> {
+         |FROM cls GROUP BY source ORDER BY source""".stripMargin),
+    Entry("q235_index_maintenance", indexMaintenance, {
       val oldSrc = s"(SELECT vec_id, embedding FROM embeddings WHERE ${Sampling.O.hashBucket("vec_id")} < 80)"
       s"""WITH ${Similarity.O.kmeansL2Ctes("i", oldSrc, Similarity.Dim)},
          |ee AS (SELECT vec_id, embedding, (${Sampling.O.hashBucket("vec_id")} >= 80) AS is_new
@@ -4935,8 +4697,8 @@ object PipelineQueries {
          |      THEN CAST(COALESCE(n_old, 0) AS DOUBLE) / CAST(told AS DOUBLE) ELSE 0.0 END, 6) AS share_drift
          |FROM (SELECT cent_id FROM icent) ic LEFT JOIN cnt USING (cent_id) CROSS JOIN tot
          |ORDER BY ic.cent_id""".stripMargin
-    },
-    "q233_epoch_allocation" -> {
+    }),
+    Entry("q233_epoch_allocation", epochAllocationQ, {
       val mult = "4.0"
       val rstar = graft.operators.Sampling.RepeatDecay.toString
       def eff(a: String) =
@@ -4968,8 +4730,8 @@ object PipelineQueries {
          |  round(ed, 6) AS dedup_eff_tokens,
          |  round(ed - en, 6) AS eff_gain
          |FROM e ORDER BY source""".stripMargin
-    },
-    "q230_neyman_plan" ->
+    }),
+    Entry("q230_neyman_plan", neymanPlan,
       s"""WITH s AS (SELECT source, ${TO.textStats} FROM documents),
          |st AS (SELECT source, COUNT(*) AS n_rows,
          |         ${Num.O.stddev("quality_score")} AS sd FROM s GROUP BY 1),
@@ -4986,11 +4748,11 @@ object PipelineQueries {
          |      FROM w CROSS JOIN z)
          |SELECT source, n_rows, stddev, share, n_alloc, proportional_fallback,
          |  CAST(100 - SUM(n_alloc) OVER () AS BIGINT) AS remainder
-         |FROM a ORDER BY source""".stripMargin,
-    "q198_classifier_auc" -> Classifier.O.auc("source = 'src0'"),
-    "q202_auc_by_lang" -> Classifier.O.aucBy("source = 'src0'", "lang"),
-    "q212_doremi_mixture" -> Sampling.O.doremiWeights(),
-    "q204_budget_selection" ->
+         |FROM a ORDER BY source""".stripMargin),
+    Entry("q198_classifier_auc", classifierAuc, Classifier.O.auc("source = 'src0'")),
+    Entry("q202_auc_by_lang", aucByLang, Classifier.O.aucBy("source = 'src0'", "lang")),
+    Entry("q212_doremi_mixture", doremiMixture, Sampling.O.doremiWeights()),
+    Entry("q204_budget_selection", budgetSelection,
       s"""WITH s AS (SELECT doc_id, source, ${TO.textStats} FROM documents),
          |st AS (SELECT doc_id, source, CAST(n_tokens AS BIGINT) AS toks, quality_score FROM s),
          |b AS (SELECT source,
@@ -5006,8 +4768,8 @@ object PipelineQueries {
          |  MAX(budget) AS budget,
          |  CAST(SUM(CASE WHEN cum <= budget THEN toks ELSE 0 END) AS BIGINT) AS tokens_selected,
          |  min(CASE WHEN cum <= budget THEN round(quality_score, 6) END) AS quality_cutoff
-         |FROM c GROUP BY source ORDER BY source""".stripMargin,
-    "q206_matryoshka_recall" -> {
+         |FROM c GROUP BY source ORDER BY source""".stripMargin),
+    Entry("q206_matryoshka_recall", matryoshkaRecall, {
       def topk(dim: Int) =
         s"""SELECT query_id, cand_id FROM (
            |  SELECT q.vec_id AS query_id, c.vec_id AS cand_id,
@@ -5035,21 +4797,25 @@ object PipelineQueries {
          |SELECT * FROM (
          |$arms
          |) ORDER BY dim""".stripMargin
-    },
-    "q155_pq_codes" -> Similarity.O.pqCodes,
-    "q156_pq_adc" -> Similarity.O.pqAdc("vec_id < 20", k = 5),
-    "q161_ivfpq" -> Similarity.O.ivfPq("vec_id < 20", k = 5),
-    "q162_jl_projection" -> Similarity.O.jlProjection,
-    "q163_jl_distortion" -> Similarity.O.jlDistortion("vec_id < 20"),
-    "q164_winnowing" -> Dedup.O.winnowFingerprints,
-    "q165_winnow_overlap" -> Dedup.O.winnowOverlapPairs(),
-    "q166_jl_kmeans_agreement" -> Similarity.O.jlKmeansAgreement,
-    "q167_padding_waste" -> Corpus.O.paddingWaste(),
-    "q157_cdc_chunks" -> Corpus.O.cdcChunks(),
-    "q158_cdc_dedup" -> Corpus.O.cdcDedupStats(),
-    "q244_boilerplate" -> Corpus.O.boilerplateCensus(),
-    "q159_stupid_backoff" -> TO.stupidBackoffScores("NOT (source = 'src0')"),
-    "q160_pq_recall" ->
+    }),
+    Entry("q155_pq_codes", pqEncoding, Similarity.O.pqCodes),
+    Entry("q156_pq_adc", pqAdc, Similarity.O.pqAdc("vec_id < 20", k = 5)),
+    Entry("q161_ivfpq", ivfPq, Similarity.O.ivfPq("vec_id < 20", k = 5)),
+    Entry("q162_jl_projection", jlProjection, Similarity.O.jlProjection),
+    Entry("q163_jl_distortion", jlDistortion, Similarity.O.jlDistortion("vec_id < 20")),
+    Entry("q164_winnowing", winnowing, Dedup.O.winnowFingerprints),
+    Entry("q165_winnow_overlap", winnowOverlap, Dedup.O.winnowOverlapPairs()),
+    Entry("q166_jl_kmeans_agreement",
+      (s, dir) => Similarity.jlKmeansAgreement(emb(s, dir), Some(mKmeansL2(s, dir))),
+      Similarity.O.jlKmeansAgreement),
+    Entry("q167_padding_waste",
+      (s, dir) => Corpus.paddingWaste(docs(s, dir)).orderBy("strategy"),
+      Corpus.O.paddingWaste()),
+    Entry("q157_cdc_chunks", cdcChunking, Corpus.O.cdcChunks()),
+    Entry("q158_cdc_dedup", cdcDedup, Corpus.O.cdcDedupStats()),
+    Entry("q244_boilerplate", boilerplate, Corpus.O.boilerplateCensus()),
+    Entry("q159_stupid_backoff", stupidBackoff, TO.stupidBackoffScores("NOT (source = 'src0')")),
+    Entry("q160_pq_recall", pqRecall,
       s"""WITH ex AS (SELECT query_id, cand_id FROM (
          |  SELECT q.vec_id AS query_id, c.vec_id AS cand_id,
          |    CAST(row_number() OVER (PARTITION BY q.vec_id
@@ -5063,11 +4829,11 @@ object PipelineQueries {
          |       (SELECT CAST(COUNT(*) AS BIGINT) FROM ex) AS n_exact_pairs,
          |       h.n_hits,
          |       round(CAST(h.n_hits AS DOUBLE) / (SELECT COUNT(*) FROM ex), 6) AS recall_at_10
-         |FROM h""".stripMargin,
-    "q154_span_corruption" -> Corpus.O.spanCorruption(),
-    "q153_dsir" -> TO.dsirScores("source = 'src0'"),
-    "q151_source_divergence" -> TO.sourceDivergence,
-    "q152_temperature_mixture" ->
+         |FROM h""".stripMargin),
+    Entry("q154_span_corruption", spanCorruption, Corpus.O.spanCorruption()),
+    Entry("q153_dsir", dsirScores, TO.dsirScores("source = 'src0'")),
+    Entry("q151_source_divergence", sourceDivergence, TO.sourceDivergence),
+    Entry("q152_temperature_mixture", temperatureMixture,
       s"""WITH ps AS (SELECT source, CAST(SUM(len(string_split(text, ' '))) AS BIGINT) AS tokens
          |  FROM documents GROUP BY 1),
          |tot AS (SELECT SUM(tokens) AS total FROM ps),
@@ -5078,10 +4844,10 @@ object PipelineQueries {
          |SELECT source, tokens, round(share, 6) AS share,
          |  round(scaled / z, 6) AS weight,
          |  round(scaled / z / share, 6) AS upsample
-         |FROM sh CROSS JOIN z ORDER BY source""".stripMargin,
-    "q149_bm25" -> TO.bm25TopK(),
-    "q150_bpe_merges" -> Corpus.O.bpeMergePairs(),
-    "q148_hard_negatives" ->
+         |FROM sh CROSS JOIN z ORDER BY source""".stripMargin),
+    Entry("q149_bm25", bm25Search, TO.bm25TopK()),
+    Entry("q150_bpe_merges", bpeMerges, Corpus.O.bpeMergePairs()),
+    Entry("q148_hard_negatives", hardNegativeMining,
       s"""WITH b AS (SELECT vec_id, label, embedding,
          |  (${Similarity.O.bucket("embedding")}) AS bucket FROM embeddings)
          |SELECT query_id, cand_id, cosine_sim, rank FROM (
@@ -5091,9 +4857,9 @@ object PipelineQueries {
          |      ORDER BY round(${V.O.cosine("q.embedding", "c.embedding")}, 6) DESC, c.vec_id) AS INT) AS rank
          |  FROM b q JOIN b c ON q.bucket = c.bucket AND c.label != q.label
          |  WHERE q.vec_id < 20)
-         |WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin,
-    "q147_semdedup" -> Similarity.O.semDedup(),
-    "q146_curation_decisions" ->
+         |WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin),
+    Entry("q147_semdedup", semDedupDecisions, Similarity.O.semDedup()),
+    Entry("q146_curation_decisions", curationDecisions,
       s"""WITH k AS (SELECT doc_id, keep FROM (${Dedup.O.canonicalKeep})),
          |g AS (SELECT doc_id, pass_quality FROM (${TO.qualityGate()})),
          |sp AS (SELECT doc_id, ${Sampling.O.split("doc_id")} AS split FROM documents)
@@ -5104,8 +4870,8 @@ object PipelineQueries {
          |       WHEN sp.split <> 'train' THEN 'holdout'
          |       ELSE 'selected' END AS cut_stage
          |FROM sp JOIN k USING (doc_id) JOIN g USING (doc_id)
-         |ORDER BY doc_id""".stripMargin,
-    "q145_collection_surface" ->
+         |ORDER BY doc_id""".stripMargin),
+    Entry("q145_collection_surface", collectionSurface,
       """WITH w AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents)
         |SELECT doc_id,
         |  CAST(len(w) AS INT) AS n_words,
@@ -5116,17 +4882,17 @@ object PipelineQueries {
         |  (len(list_filter(w, x -> length(x) >= 10)) > 0) AS any_very_long,
         |  md5(array_to_string(list_sort(list_distinct(w))[1:3], ',')) AS sorted3_md5,
         |  list_reverse(w)[1] AS last_word
-        |FROM w ORDER BY doc_id""".stripMargin,
-    "q140_rep_ngrams" -> TO.repNGramChars(),
-    "q141_split_leakage" ->
+        |FROM w ORDER BY doc_id""".stripMargin),
+    Entry("q140_rep_ngrams", repNGrams, TO.repNGramChars()),
+    Entry("q141_split_leakage", splitLeakage,
       s"""WITH pr AS (SELECT d1, d2 FROM (${Dedup.O.ngramJaccardPairs})),
          |sp AS (SELECT doc_id, ${Sampling.O.split("doc_id")} AS split FROM documents)
          |SELECT least(a.split, b.split) AS split_a, greatest(a.split, b.split) AS split_b,
          |  COUNT(*) AS n_pairs,
          |  (least(a.split, b.split) <> greatest(a.split, b.split)) AS is_leak
          |FROM pr JOIN sp a ON a.doc_id = pr.d1 JOIN sp b ON b.doc_id = pr.d2
-         |GROUP BY 1, 2, 4 ORDER BY 1, 2""".stripMargin,
-    "q142_dataset_card" ->
+         |GROUP BY 1, 2, 4 ORDER BY 1, 2""".stripMargin),
+    Entry("q142_dataset_card", datasetCard,
       s"""WITH t AS (SELECT ${TO.textStats} FROM documents),
          |s AS (SELECT COUNT(*) AS n_docs, CAST(SUM(n_tokens) AS BIGINT) AS total_tokens,
          |        CAST(SUM(bpe_token_estimate) AS BIGINT) AS total_bpe_tokens,
@@ -5141,8 +4907,8 @@ object PipelineQueries {
          |  c.total_chars, dup.n_exact_dup_docs,
          |  round(CAST(dup.n_exact_dup_docs AS DOUBLE) / s.n_docs, 6) AS dup_rate,
          |  e.n_en_docs, round(CAST(e.n_en_docs AS DOUBLE) / s.n_docs, 6) AS en_share
-         |FROM s CROSS JOIN c CROSS JOIN dup CROSS JOIN e""".stripMargin,
-    "q143_ivf_recall" ->
+         |FROM s CROSS JOIN c CROSS JOIN dup CROSS JOIN e""".stripMargin),
+    Entry("q143_ivf_recall", ivfRecall,
       s"""WITH ex AS (SELECT query_id, cand_id FROM (
          |  SELECT query_id, cand_id FROM (
          |    SELECT q.vec_id AS query_id, c.vec_id AS cand_id,
@@ -5157,8 +4923,8 @@ object PipelineQueries {
          |       (SELECT CAST(COUNT(*) AS BIGINT) FROM ex) AS n_exact_pairs,
          |       h.n_hits,
          |       round(CAST(h.n_hits AS DOUBLE) / (SELECT COUNT(*) FROM ex), 6) AS recall_at_10
-         |FROM h""".stripMargin,
-    "q224_rbo" -> {
+         |FROM h""".stripMargin),
+    Entry("q224_rbo", rboQuality, {
       val sCase = (1 to 10).map(i =>
         s"WHEN $i THEN CAST(${RboSuffix(i - 1)} AS DOUBLE)").mkString(" ")
       s"""WITH ex AS MATERIALIZED (SELECT query_id, cand_id, rank FROM (
@@ -5179,8 +4945,8 @@ object PipelineQueries {
          |  round(${Num.O.sumHi("COALESCE(pq.rbo, CAST(0 AS DOUBLE))")} / COUNT(*), 6) AS mean_rbo,
          |  round(MIN(COALESCE(pq.rbo, CAST(0 AS DOUBLE))), 6) AS min_rbo
          |FROM qs LEFT JOIN pq USING (query_id)""".stripMargin
-    },
-    "q207_ann_ranking_quality" -> {
+    }),
+    Entry("q207_ann_ranking_quality", annRankingQuality, {
       val wCase = (1 to 10).map(i =>
         s"WHEN $i THEN CAST(${DcgW(i - 1)} AS DOUBLE)").mkString(" ")
       s"""WITH ex AS MATERIALIZED (SELECT query_id, cand_id, rank FROM (
@@ -5209,8 +4975,8 @@ object PipelineQueries {
          |  round(${Num.O.sum("COALESCE(rr.rr, CAST(0 AS DOUBLE))")} / COUNT(*), 6) AS mrr,
          |  round(${Num.O.sum(s"COALESCE(dq.dcg, CAST(0 AS DOUBLE)) / CAST($Idcg AS DOUBLE)")} / COUNT(*), 6) AS mean_ndcg
          |FROM qs LEFT JOIN dq USING (query_id) LEFT JOIN rr USING (query_id)""".stripMargin
-    },
-    "q144_ivf_probe_sweep" -> {
+    }),
+    Entry("q144_ivf_probe_sweep", ivfProbeSweep, {
       val exactSub =
         s"""SELECT query_id, cand_id FROM (
            |  SELECT q.vec_id AS query_id, c.vec_id AS cand_id,
@@ -5231,16 +4997,16 @@ object PipelineQueries {
          |SELECT CAST(h.nprobe AS INT) AS nprobe, h.n_hits, t.n_exact_pairs,
          |  round(CAST(h.n_hits AS DOUBLE) / t.n_exact_pairs, 6) AS recall_at_10
          |FROM h CROSS JOIN t ORDER BY nprobe""".stripMargin
-    },
-    "q40_dedup_exact" -> Dedup.O.exact,
-    "q41_fingerprint" ->
+    }),
+    Entry("q40_dedup_exact", dedupExact, Dedup.O.exact),
+    Entry("q41_fingerprint", fingerprint,
       s"""SELECT doc_id,
          |  ('0x' || substr(md5(text), 1, 15))::BIGINT AS content_fp,
          |  ${TO.rollingFp} AS rolling_fp
-         |FROM documents ORDER BY doc_id""".stripMargin,
-    "q42_ngram_jaccard" -> Dedup.O.ngramJaccardPairs,
-    "q52_dedup_clusters" -> Dedup.O.clusters,
-    "q53_embed_clusters" ->
+         |FROM documents ORDER BY doc_id""".stripMargin),
+    Entry("q42_ngram_jaccard", ngramJaccard, Dedup.O.ngramJaccardPairs),
+    Entry("q52_dedup_clusters", dedupClusters, Dedup.O.clusters),
+    Entry("q53_embed_clusters", embedClusters,
       s"""WITH RECURSIVE ${Similarity.O.bucketedPairsCte(0.15)},
          |sym AS (SELECT v1 AS src, v2 AS dst FROM pairs UNION SELECT v2, v1 FROM pairs),
          |reach(src, dst) AS (
@@ -5249,10 +5015,10 @@ object PipelineQueries {
          |  SELECT r.src, s.dst FROM reach r JOIN sym s ON r.dst = s.src)
          |SELECT src AS doc_id, min(dst) AS cluster_rep, COUNT(DISTINCT dst) AS cluster_size,
          |  (src = min(dst)) AS is_kept
-         |FROM reach GROUP BY src ORDER BY doc_id""".stripMargin,
-    "q43_minhash_lsh" -> Dedup.O.minhashPairs,
-    "q44_simhash" -> Dedup.O.simhashPairs,
-    "q45_embed_neardup" ->
+         |FROM reach GROUP BY src ORDER BY doc_id""".stripMargin),
+    Entry("q43_minhash_lsh", minhashLsh, Dedup.O.minhashPairs),
+    Entry("q44_simhash", simhash, Dedup.O.simhashPairs),
+    Entry("q45_embed_neardup", embedNearDup,
       s"""WITH bkt AS MATERIALIZED (SELECT vec_id, label, embedding,
          |    (${Similarity.O.bucket("embedding")}) AS bucket FROM embeddings),
          |bsz AS (SELECT label, bucket FROM bkt GROUP BY label, bucket
@@ -5263,8 +5029,8 @@ object PipelineQueries {
          |FROM blk a JOIN blk b
          |  ON a.label = b.label AND a.bucket = b.bucket AND a.vec_id < b.vec_id
          |WHERE round(${V.O.cosine("a.embedding", "b.embedding")}, 6) >= 0.30
-         |ORDER BY label, v1, v2""".stripMargin,
-    "q46_ann_bruteforce" ->
+         |ORDER BY label, v1, v2""".stripMargin),
+    Entry("q46_ann_bruteforce", annBruteForce,
       s"""SELECT query_id, cand_id, cosine_sim, rank FROM (
          |  SELECT q.vec_id AS query_id, c.vec_id AS cand_id,
          |    round(${V.O.cosine("q.embedding", "c.embedding")}, 6) AS cosine_sim,
@@ -5272,8 +5038,8 @@ object PipelineQueries {
          |      ORDER BY round(${V.O.cosine("q.embedding", "c.embedding")}, 6) DESC, c.vec_id) AS INT) AS rank
          |  FROM embeddings q JOIN embeddings c ON c.vec_id != q.vec_id
          |  WHERE q.vec_id < 20)
-         |WHERE rank <= 10 ORDER BY query_id, rank""".stripMargin,
-    "q47_ann_lsh" ->
+         |WHERE rank <= 10 ORDER BY query_id, rank""".stripMargin),
+    Entry("q47_ann_lsh", annLsh,
       s"""WITH b AS (SELECT vec_id, embedding, (${Similarity.O.bucket("embedding")}) AS bucket FROM embeddings)
          |SELECT query_id, cand_id, bucket, cosine_sim, rank FROM (
          |  SELECT q.vec_id AS query_id, c.vec_id AS cand_id, q.bucket AS bucket,
@@ -5282,56 +5048,56 @@ object PipelineQueries {
          |      ORDER BY round(${V.O.cosine("q.embedding", "c.embedding")}, 6) DESC, c.vec_id) AS INT) AS rank
          |  FROM b q JOIN b c ON q.bucket = c.bucket AND c.vec_id != q.vec_id
          |  WHERE q.vec_id < 20)
-         |WHERE rank <= 3 ORDER BY query_id, rank""".stripMargin,
-    "q65_ann_ivf" -> Similarity.O.ivf("vec_id < 20", k = 5),
-    "q66_frame_sample" ->
+         |WHERE rank <= 3 ORDER BY query_id, rank""".stripMargin),
+    Entry("q65_ann_ivf", annIvf, Similarity.O.ivf("vec_id < 20", k = 5)),
+    Entry("q66_frame_sample", frameSample,
       """WITH m AS (SELECT doc_id, text, CAST(1 + len(text) % 8 AS INT) AS n_frames FROM documents),
         |f AS (SELECT doc_id, n_frames, CAST(unnest(range(0, n_frames, 3)) AS INT) AS frame_idx, text FROM m)
         |SELECT doc_id, n_frames, frame_idx,
         |  CAST(len(substring(text, frame_idx * 8 + 1, 8)) AS INT) AS frame_len,
         |  md5(substring(text, frame_idx * 8 + 1, 8)) AS frame_md5
-        |FROM f ORDER BY doc_id, frame_idx""".stripMargin,
-    "q67_embed_centroids" ->
+        |FROM f ORDER BY doc_id, frame_idx""".stripMargin),
+    Entry("q67_embed_centroids", embedCentroids,
       s"""SELECT label, CAST(i AS INT) AS dim, COUNT(*) AS n_vecs,
          |  ${graft.functions.Num.O.avg("CAST(embedding[i] AS DOUBLE)")} AS avg_val
          |FROM embeddings, range(1, ${Similarity.Dim + 1}) t(i)
-         |GROUP BY label, i ORDER BY label, dim""".stripMargin,
-    "q68_hash_sample" ->
+         |GROUP BY label, i ORDER BY label, dim""".stripMargin),
+    Entry("q68_hash_sample", hashSample,
       s"""SELECT doc_id, source, CAST(${Sampling.O.hashBucket("doc_id")} AS INT) AS bucket
          |FROM documents WHERE ${Sampling.O.hashBucket("doc_id")} < 20
-         |ORDER BY doc_id""".stripMargin,
-    "q69_split_assign" ->
+         |ORDER BY doc_id""".stripMargin),
+    Entry("q69_split_assign", splitAssign,
       s"""SELECT source, ${Sampling.O.split("doc_id")} AS split, COUNT(*) AS n_docs
-         |FROM documents GROUP BY 1, 2 ORDER BY source, split""".stripMargin,
-    "q70_text_clean" ->
+         |FROM documents GROUP BY 1, 2 ORDER BY source, split""".stripMargin),
+    Entry("q70_text_clean", textClean,
       s"""SELECT doc_id, md5(${TO.cleanText}) AS clean_md5,
          |  CAST(length(${TO.cleanText}) AS INT) AS clean_len,
          |  CAST(len(string_split(${TO.cleanText}, ' ')) AS INT) AS clean_tokens
-         |FROM documents ORDER BY doc_id""".stripMargin,
-    "q94_fuzzy_pairs" -> Dedup.O.editDistancePairs(),
-    "q95_contamination" -> Corpus.O.contamination("doc_id < 10"),
-    "q96_pmi_collocations" -> TO.pmiCollocations(),
-    "q98_char_entropy" -> TO.charEntropy,
-    "q100_quality_gate" -> TO.qualityGate(),
-    "q102_variant_shred" ->
+         |FROM documents ORDER BY doc_id""".stripMargin),
+    Entry("q94_fuzzy_pairs", fuzzyPairs, Dedup.O.editDistancePairs()),
+    Entry("q95_contamination", contamination, Corpus.O.contamination("doc_id < 10")),
+    Entry("q96_pmi_collocations", pmi, TO.pmiCollocations()),
+    Entry("q98_char_entropy", entropy, TO.charEntropy),
+    Entry("q100_quality_gate", qualityGate, TO.qualityGate()),
+    Entry("q102_variant_shred", variantShred,
       s"""SELECT event_type, COUNT(*) AS n_events,
          |  min(${SemiStructured.O.propK()}) AS min_k,
          |  max(${SemiStructured.O.propK()}) AS max_k,
          |  CAST(SUM(${SemiStructured.O.propK()}) AS BIGINT) AS sum_k,
          |  round(${Num.O.avg(SemiStructured.O.propK())}, 6) AS avg_k
-         |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin,
-    "q103_containment" -> Dedup.O.containmentPairs,
-    "q105_canonical_keep" -> Dedup.O.canonicalKeep,
-    "q109_dim_stats" ->
+         |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin),
+    Entry("q103_containment", containment, Dedup.O.containmentPairs),
+    Entry("q105_canonical_keep", canonicalKeep, Dedup.O.canonicalKeep),
+    Entry("q109_dim_stats", dimStats,
       s"""SELECT CAST(i AS INT) AS dim, COUNT(*) AS n,
          |  round(${Num.O.avg("CAST(embedding[i] AS DOUBLE)")}, 6) AS mean_v,
          |  round(${Num.O.stddev("CAST(embedding[i] AS DOUBLE)")}, 6) AS std_v,
          |  min(CAST(embedding[i] AS DOUBLE)) AS min_v,
          |  max(CAST(embedding[i] AS DOUBLE)) AS max_v
          |FROM embeddings, range(1, ${Similarity.Dim + 1}) t(i)
-         |GROUP BY i ORDER BY dim""".stripMargin,
-    "q110_zipf_fit" -> TO.zipfFit(),
-    "q111_lsh_recall" ->
+         |GROUP BY i ORDER BY dim""".stripMargin),
+    Entry("q110_zipf_fit", zipf, TO.zipfFit()),
+    Entry("q111_lsh_recall", lshRecall,
       s"""WITH ex AS (
          |  SELECT a.vec_id AS v1, b.vec_id AS v2
          |  FROM embeddings a JOIN embeddings b ON a.label = b.label AND a.vec_id < b.vec_id
@@ -5347,12 +5113,12 @@ object PipelineQueries {
          |  (SELECT n_candidates FROM nc) AS n_candidates,
          |  (SELECT COUNT(*) FROM j WHERE b1 = b2) AS n_hit,
          |  round((SELECT COUNT(*) FROM j WHERE b1 = b2)
-         |        / (SELECT COUNT(*) FROM j), 6) AS recall""".stripMargin,
-    "q114_dup_spans" -> Dedup.O.duplicateSpans(),
-    "q129_top_pc" -> Clustering.O.topPrincipalComponent(),
-    "q246_isotropy" -> Clustering.O.isotropyAudit(),
-    "q253_abtt_transform" -> Clustering.O.allButTheTopAudit(),
-    "q130_novelty" ->
+         |        / (SELECT COUNT(*) FROM j), 6) AS recall""".stripMargin),
+    Entry("q114_dup_spans", dupSpans, Dedup.O.duplicateSpans()),
+    Entry("q129_top_pc", topPc, Clustering.O.topPrincipalComponent()),
+    Entry("q246_isotropy", isotropy, Clustering.O.isotropyAudit()),
+    Entry("q253_abtt_transform", abttTransform, Clustering.O.allButTheTopAudit()),
+    Entry("q130_novelty", novelty,
       """WITH wl AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
         |sh AS (SELECT DISTINCT doc_id, g FROM (
         |         SELECT doc_id, unnest(list_transform(range(1, len(w) - 1), i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2])) AS g
@@ -5362,20 +5128,20 @@ object PipelineQueries {
         |  CAST(count_if(first_doc < doc_id) AS BIGINT) AS n_seen_before,
         |  round(CAST(COUNT(*) - count_if(first_doc < doc_id) AS DOUBLE) / COUNT(*), 6) AS novelty
         |FROM sh JOIN f USING (g)
-        |GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-    "q131_incremental_dedup" -> Dedup.O.incrementalFlags(IncrementalSplit),
-    "q136_threshold_sweep" ->
+        |GROUP BY doc_id ORDER BY doc_id""".stripMargin),
+    Entry("q131_incremental_dedup", incrementalDedup, Dedup.O.incrementalFlags(IncrementalSplit)),
+    Entry("q136_threshold_sweep", thresholdSweep,
       s"""SELECT CAST(floor(jaccard * 10) AS INT) AS decile, COUNT(*) AS n_pairs
          |FROM (${Dedup.O.ngramJaccardPairs})
-         |GROUP BY 1 ORDER BY decile""".stripMargin,
-    "q137_minhash_calibration" ->
+         |GROUP BY 1 ORDER BY decile""".stripMargin),
+    Entry("q137_minhash_calibration", minhashCalibration,
       s"""WITH mh AS (SELECT d1, d2, est_jaccard FROM (${Dedup.O.minhashPairs})),
          |ex AS (SELECT d1, d2, jaccard FROM (${Dedup.O.ngramJaccardPairs}))
          |SELECT COUNT(*) AS n_pairs,
          |  round(${Num.O.avg("abs(est_jaccard - jaccard)")}, 6) AS mae,
          |  round(MAX(abs(est_jaccard - jaccard)), 6) AS max_err
-         |FROM mh JOIN ex USING (d1, d2)""".stripMargin,
-    "q133_dedup_funnel" ->
+         |FROM mh JOIN ex USING (d1, d2)""".stripMargin),
+    Entry("q133_dedup_funnel", dedupFunnel,
       s"""WITH t AS (SELECT doc_id, CAST(len(string_split(text, ' ')) AS INT) AS toks FROM documents),
          |k AS (SELECT doc_id, keep FROM (${Dedup.O.canonicalKeep})),
          |g AS (SELECT doc_id, pass_quality FROM (${TO.qualityGate()}))
@@ -5387,8 +5153,8 @@ object PipelineQueries {
          |  CAST(SUM(CASE WHEN keep AND pass_quality THEN toks END) AS BIGINT) AS tokens_final,
          |  round(100.0 * CAST(SUM(CASE WHEN keep AND pass_quality THEN toks END) AS BIGINT)
          |        / CAST(SUM(toks) AS BIGINT), 6) AS yield_pct
-         |FROM t JOIN k USING (doc_id) JOIN g USING (doc_id)""".stripMargin,
-    "q134_crossmodal_agreement" ->
+         |FROM t JOIN k USING (doc_id) JOIN g USING (doc_id)""".stripMargin),
+    Entry("q134_crossmodal_agreement", crossModalAgreement,
       s"""WITH tp AS (SELECT d1, d2, TRUE AS t FROM (${Dedup.O.ngramJaccardPairs})),
          |${Similarity.O.bucketedPairsCte(0.40)},
          |ep AS (SELECT v1 AS d1, v2 AS d2, TRUE AS e FROM pairs),
@@ -5400,8 +5166,8 @@ object PipelineQueries {
          |  round(CAST(count_if(t AND e) AS DOUBLE)
          |        / (count_if(t AND e) + count_if(t AND e IS NULL) + count_if(t IS NULL AND e)), 6)
          |    AS agreement
-         |FROM f""".stripMargin,
-    "q132_triangles" ->
+         |FROM f""".stripMargin),
+    Entry("q132_triangles", triangleStats,
       s"""WITH ${Similarity.O.bucketedPairsCte(0.15)},
          |edges AS (SELECT v1 AS src, v2 AS dst FROM pairs),
          |${Graph.O.trianglesSql}
@@ -5409,8 +5175,8 @@ object PipelineQueries {
          |  CASE WHEN t.deg >= 2
          |       THEN round(2.0 * COALESCE(pn.n_triangles, 0) / (t.deg * (t.deg - 1)), 6) END
          |    AS clustering_coeff
-         |FROM tdeg t LEFT JOIN pn USING (v) ORDER BY id""".stripMargin,
-    "q126_expectations" ->
+         |FROM tdeg t LEFT JOIN pn USING (v) ORDER BY id""".stripMargin),
+    Entry("q126_expectations", expectationsGate,
       """WITH m AS (SELECT
         |    CAST(-COUNT(*) AS DOUBLE) AS min_rows,
         |    CAST(COUNT(*) - COUNT(DISTINCT event_id) AS DOUBLE) AS pk_duplicates,
@@ -5428,8 +5194,8 @@ object PipelineQueries {
         |  SELECT 'pk_duplicates', pk_duplicates, 0.0, pk_duplicates <= 0.0 FROM m
         |  UNION ALL
         |  SELECT 'value_out_of_range', value_out_of_range, 0.0, value_out_of_range <= 0.0 FROM m)
-        |ORDER BY check_name""".stripMargin,
-    "q123_mixture" -> {
+        |ORDER BY check_name""".stripMargin),
+    Entry("q123_mixture", mixture, {
       val caseSql = MixtureTargets
         .map { case (src, pct) => s"WHEN source = '$src' THEN $pct" }
         .mkString("CASE ", " ", s" ELSE $MixtureDefaultPct END")
@@ -5446,8 +5212,8 @@ object PipelineQueries {
          |  round(CAST(actual_tokens AS DOUBLE)
          |        * least(1.0, target_tokens / CAST(actual_tokens AS DOUBLE)), 6) AS expected_tokens
          |FROM k ORDER BY source""".stripMargin
-    },
-    "q124_vocab_coverage" ->
+    }),
+    Entry("q124_vocab_coverage", vocabCoverage,
       """WITH w AS (SELECT unnest(string_split(text, ' ')) AS w FROM documents),
         |t AS (SELECT COUNT(*) AS total FROM w),
         |top AS (SELECT w, COUNT(*) AS c FROM w GROUP BY 1 ORDER BY c DESC, w LIMIT 20),
@@ -5457,8 +5223,8 @@ object PipelineQueries {
         |SELECT rank, w, c, cum_c,
         |  round(CAST(cum_c AS DOUBLE) / total, 6) AS cum_share,
         |  (round(CAST(cum_c AS DOUBLE) / total, 6) >= 0.9) AS covers_90pct
-        |FROM r CROSS JOIN t ORDER BY rank""".stripMargin,
-    "q116_key_skew" ->
+        |FROM r CROSS JOIN t ORDER BY rank""".stripMargin),
+    Entry("q116_key_skew", keySkew,
       s"""WITH c AS (SELECT user_id, COUNT(*) AS c FROM events GROUP BY 1),
          |top AS (SELECT user_id AS top_key, c AS top_c FROM c ORDER BY c DESC, user_id LIMIT 1),
          |a AS (SELECT COUNT(*) AS n_keys, CAST(SUM(c) AS BIGINT) AS n_rows, MAX(c) AS max_c,
@@ -5468,8 +5234,8 @@ object PipelineQueries {
          |      FROM c)
          |SELECT n_keys, n_rows, max_c, avg_c, p50_c, p99_c, top_key, top_c,
          |  round(max_c / avg_c, 6) AS skew_ratio
-         |FROM a CROSS JOIN top""".stripMargin,
-    "q115_inverted_index" ->
+         |FROM a CROSS JOIN top""".stripMargin),
+    Entry("q115_inverted_index", invertedIndex,
       s"""WITH p AS (SELECT DISTINCT doc_id, unnest(string_split(text, ' ')) AS term FROM documents),
          |t AS (SELECT term, COUNT(*) AS df FROM p GROUP BY 1
          |      HAVING COUNT(*) BETWEEN $InvIdxMinDf AND $InvIdxMaxDf),
@@ -5480,8 +5246,8 @@ object PipelineQueries {
          |SELECT term, df, shard, COUNT(*) AS n,
          |  MIN(doc_id) AS first_doc, MAX(doc_id) AS last_doc,
          |  md5(array_to_string(list_sort(list(doc_id)), ',')) AS postings_md5
-         |FROM sh GROUP BY term, df, shard ORDER BY term, shard""".stripMargin,
-    "q113_cms_heavy_hitters" -> {
+         |FROM sh GROUP BY term, df, shard ORDER BY term, shard""".stripMargin),
+    Entry("q113_cms_heavy_hitters", cmsHeavyHitters, {
       import graft.functions.{Sketch => SK}
       s"""WITH w AS (SELECT unnest(string_split(text, ' ')) AS w FROM documents),
          |b AS (${SK.O.cmsBuckets("SELECT w FROM w", "w")}),
@@ -5492,33 +5258,33 @@ object PipelineQueries {
          |        GROUP BY 1, 2)
          |SELECT w, exact_c, cms_est, cms_est - exact_c AS overcount
          |FROM est ORDER BY exact_c DESC, w""".stripMargin
-    },
-    "q104_weighted_sample" ->
+    }),
+    Entry("q104_weighted_sample", weightedSample,
       s"""SELECT doc_id, source, n_chars, ${Sampling.O.esKey("doc_id", "n_chars")} AS es_key
          |FROM documents
-         |ORDER BY es_key, doc_id LIMIT 100""".stripMargin,
-    "q101_pagerank" ->
+         |ORDER BY es_key, doc_id LIMIT 100""".stripMargin),
+    Entry("q101_pagerank", pagerank,
       s"""WITH ${Similarity.O.bucketedPairsCte(0.15)},
          |edges AS (SELECT v1 AS src, v2 AS dst FROM pairs UNION ALL SELECT v2, v1 FROM pairs),
          |deg AS (SELECT src, COUNT(*) AS deg FROM edges GROUP BY 1),
          |nodes AS (SELECT DISTINCT src AS id FROM edges UNION SELECT dst FROM edges),
          |${Graph.O.pageRankCtes(iters = 5)}
          |SELECT r5.id, COALESCE(d.deg, 0) AS out_degree, r5.m / 1000000.0 AS pagerank
-         |FROM r5 LEFT JOIN deg d ON d.src = r5.id ORDER BY id""".stripMargin,
-    "q99_vector_stats" ->
+         |FROM r5 LEFT JOIN deg d ON d.src = r5.id ORDER BY id""".stripMargin),
+    Entry("q99_vector_stats", vecStats,
       """SELECT vec_id,
         |  list_min(embedding) AS min_v,
         |  list_max(embedding) AS max_v,
         |  CAST(len(list_filter(embedding, x -> x > 0)) AS INT) AS n_pos,
         |  (list_reduce(list_prepend(CAST(0 AS DOUBLE), list_transform(embedding, x -> CAST(x AS DOUBLE))), (a, b) -> a + b) / len(embedding)) AS mean_v,
         |  (len(list_filter(embedding, x -> abs(x) > CAST(0.9 AS FLOAT))) > 0) AS has_large
-        |FROM embeddings ORDER BY vec_id""".stripMargin,
-    "q86_bigram_lm" -> TO.bigramLmScore,
-    "q87_pack_sequences" ->
-      s"${Corpus.O.packSequences(tokenBudget = 256)}\nORDER BY source, doc_id",
-    "q88_token_chunks" ->
-      s"${Corpus.O.chunkTokens(chunkTokens = 64, stride = 48)}\nORDER BY doc_id, chunk_idx",
-    "q89_quantize_int8" ->
+        |FROM embeddings ORDER BY vec_id""".stripMargin),
+    Entry("q86_bigram_lm", bigramLm, TO.bigramLmScore),
+    Entry("q87_pack_sequences", packSeqs,
+      s"${Corpus.O.packSequences(tokenBudget = 256)}\nORDER BY source, doc_id"),
+    Entry("q88_token_chunks", chunks,
+      s"${Corpus.O.chunkTokens(chunkTokens = 64, stride = 48)}\nORDER BY doc_id, chunk_idx"),
+    Entry("q89_quantize_int8", quantize,
       """WITH e AS (SELECT vec_id, embedding,
         |             CAST(list_max(list_transform(embedding, x -> abs(x))) AS DOUBLE) AS scale
         |           FROM embeddings),
@@ -5529,25 +5295,25 @@ object PipelineQueries {
         |SELECT vec_id, scale,
         |  list_reduce(list_prepend(CAST(0 AS BIGINT), q), (a, b) -> a + b) AS q_sum,
         |  md5(array_to_string(list_transform(q, x -> CAST(x AS VARCHAR)), ',')) AS q_md5
-        |FROM q ORDER BY vec_id""".stripMargin,
-    "q84_bloom_semi_join" ->
+        |FROM q ORDER BY vec_id""".stripMargin),
+    Entry("q84_bloom_semi_join", bloomSemi,
       """SELECT user_id, COUNT(*) AS n_events FROM events
         |WHERE user_id IN (SELECT user_id FROM events WHERE event_type = 'purchase' AND value > 200)
-        |GROUP BY user_id ORDER BY user_id""".stripMargin,
-    "q85_tfidf" -> TO.tfidfTopTerms(k = 3),
-    "q82_repetition" -> TO.repetitionStats(),
-    "q83_stratified_sample" ->
+        |GROUP BY user_id ORDER BY user_id""".stripMargin),
+    Entry("q85_tfidf", tfidf, TO.tfidfTopTerms(k = 3)),
+    Entry("q82_repetition", repetition, TO.repetitionStats()),
+    Entry("q83_stratified_sample", stratified,
       s"""SELECT doc_id, source, CAST(${Sampling.O.hashBucket("doc_id")} AS INT) AS bucket,
          |  CAST(${Sampling.O.strataRate("source", StrataRates, StrataDefaultPct)} AS INT) AS keep_pct
          |FROM documents
          |WHERE ${Sampling.O.hashBucket("doc_id")} < ${Sampling.O.strataRate("source", StrataRates, StrataDefaultPct)}
-         |ORDER BY doc_id""".stripMargin,
-    "q48_lang_id" ->
+         |ORDER BY doc_id""".stripMargin),
+    Entry("q48_lang_id", langId,
       s"""SELECT lang, ${TO.predictedLang} AS predicted_lang, COUNT(*) AS n_docs
          |FROM (SELECT lang, ${TO.langScores} FROM documents)
-         |GROUP BY 1, 2 ORDER BY lang, predicted_lang""".stripMargin,
-    "q211_keyness" -> TO.keyness(),
-    "q226_tail_index" ->
+         |GROUP BY 1, 2 ORDER BY lang, predicted_lang""".stripMargin),
+    Entry("q211_keyness", keyness, TO.keyness()),
+    Entry("q226_tail_index", tailIndex,
       s"""WITH d AS (SELECT source, CAST(n_chars AS DOUBLE) AS x, doc_id FROM documents
          |  WHERE n_chars IS NOT NULL AND n_chars >= 1),
          |r AS (SELECT source, x,
@@ -5561,8 +5327,8 @@ object PipelineQueries {
          |      FROM t GROUP BY 1)
          |SELECT a.source, CAST(k.xk AS BIGINT) AS x_k, round(raw, 6) AS inv_alpha,
          |  CASE WHEN raw > 0 THEN round(1.0 / raw, 6) END AS hill_alpha
-         |FROM a JOIN k USING (source) ORDER BY a.source""".stripMargin,
-    "q225_equi_depth_profile" -> {
+         |FROM a JOIN k USING (source) ORDER BY a.source""".stripMargin),
+    Entry("q225_equi_depth_profile", equiDepthProfile, {
       import graft.operators.{Robust => R}
       s"""WITH s AS MATERIALIZED (SELECT source, n_chars, quality_score
          |  FROM (SELECT source, n_chars, ${TO.textStats} FROM documents)
@@ -5584,8 +5350,8 @@ object PipelineQueries {
          |    / CAST(COUNT(*) AS DOUBLE), 6) AS avg_quality,
          |  MIN(n_chars) AS min_chars, MAX(n_chars) AS max_chars
          |FROM b GROUP BY 1, 2 ORDER BY source, band""".stripMargin
-    },
-    "q221_benford_audit" -> {
+    }),
+    Entry("q221_benford_audit", benfordAudit, {
       val bp = (1 to 9).map(d => math.log10(1.0 + 1.0 / d))
       val expCase = (1 to 9).map(d => s"WHEN digit = $d THEN ${bp(d - 1)}")
         .mkString("CASE ", " ", " END")
@@ -5603,8 +5369,8 @@ object PipelineQueries {
          |  round(CAST(SUM(CAST((CAST(obs AS DOUBLE) - expected) * (CAST(obs AS DOUBLE) - expected)
          |    / expected AS DECIMAL(38,12))) AS DOUBLE), 6) AS chi2
          |FROM x GROUP BY source ORDER BY source""".stripMargin
-    },
-    "q216_rrf_fusion" ->
+    }),
+    Entry("q216_rrf_fusion", rrfFusion,
       s"""WITH sem AS (SELECT query_id, cand_id, rank AS sem_rank FROM (
          |  SELECT q.vec_id AS query_id, c.vec_id AS cand_id,
          |    CAST(row_number() OVER (PARTITION BY q.vec_id
@@ -5634,8 +5400,8 @@ object PipelineQueries {
          |r AS (SELECT *, CAST(row_number() OVER (PARTITION BY query_id
          |        ORDER BY rrf_score DESC, cand_id) AS INT) AS fused_rank FROM f)
          |SELECT query_id, fused_rank, cand_id, rrf_score, sem_rank, lex_rank
-         |FROM r WHERE fused_rank <= 10 ORDER BY query_id, fused_rank""".stripMargin,
-    "q215_lang_source_mi" ->
+         |FROM r WHERE fused_rank <= 10 ORDER BY query_id, fused_rank""".stripMargin),
+    Entry("q215_lang_source_mi", langSourceMi,
       """WITH d AS (SELECT lang, source FROM documents),
         |j AS (SELECT lang, source, COUNT(*) AS c FROM d GROUP BY 1, 2),
         |ml AS (SELECT lang, COUNT(*) AS cl FROM d GROUP BY 1),
@@ -5654,8 +5420,8 @@ object PipelineQueries {
         |SELECT n AS n_docs, n_cells, round(mi_raw, 6) AS mi,
         |  round(hl_raw, 6) AS h_lang, round(hs_raw, 6) AS h_source,
         |  round(mi_raw / sqrt(hl_raw * hs_raw), 6) AS nmi
-        |FROM mi CROSS JOIN hl CROSS JOIN hs CROSS JOIN nn""".stripMargin,
-    "q210_pareto_skyline" ->
+        |FROM mi CROSS JOIN hl CROSS JOIN hs CROSS JOIN nn""".stripMargin),
+    Entry("q210_pareto_skyline", paretoSkyline,
       s"""WITH s AS MATERIALIZED (
          |  SELECT doc_id, n_chars, quality_score
          |  FROM (SELECT doc_id, n_chars, ${TO.textStats} FROM documents)
@@ -5664,25 +5430,25 @@ object PipelineQueries {
          |WHERE NOT EXISTS (SELECT 1 FROM s o
          |  WHERE o.n_chars >= s.n_chars AND o.quality_score >= s.quality_score
          |    AND (o.n_chars > s.n_chars OR o.quality_score > s.quality_score))
-         |ORDER BY doc_id""".stripMargin,
-    "q49_text_quality" ->
+         |ORDER BY doc_id""".stripMargin),
+    Entry("q49_text_quality", textQuality,
       s"""SELECT doc_id, n_tokens, avg_token_len, stopword_ratio,
          |  bpe_token_estimate, quality_score
          |FROM (SELECT doc_id, ${TO.textStats} FROM documents)
-         |ORDER BY doc_id""".stripMargin,
-    "q50_token_count" ->
+         |ORDER BY doc_id""".stripMargin),
+    Entry("q50_token_count", tokenCount,
       s"""SELECT source, COUNT(*) AS n_docs,
          |  CAST(SUM(n_tokens) AS BIGINT) AS total_tokens,
          |  CAST(SUM(bpe_token_estimate) AS BIGINT) AS total_bpe_tokens,
          |  round(${Num.O.avg("n_tokens")}, 6) AS avg_tokens_per_doc
          |FROM (SELECT source, ${TO.textStats} FROM documents)
-         |GROUP BY source ORDER BY source""".stripMargin,
-    "q51_multimodal_meta" ->
+         |GROUP BY source ORDER BY source""".stripMargin),
+    Entry("q51_multimodal_meta", multimodalMeta,
       """SELECT source, COUNT(*) AS n_media,
         |  CAST(SUM(strlen(text)) AS BIGINT) AS total_bytes,
         |  round((CAST(SUM(CAST((64 + (strlen(text) * 7) % 192) AS DECIMAL(38,6))) AS DOUBLE) / COUNT(*)), 6) AS avg_width,
         |  round((CAST(SUM(CAST((64 + (strlen(text) * 13) % 128) AS DECIMAL(38,6))) AS DOUBLE) / COUNT(*)), 6) AS avg_height,
         |  CAST(SUM(1 + strlen(text) % 8) AS BIGINT) AS total_frames
-        |FROM documents GROUP BY source ORDER BY source""".stripMargin
+        |FROM documents GROUP BY source ORDER BY source""".stripMargin)
   )
 }

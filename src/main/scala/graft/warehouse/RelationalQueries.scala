@@ -340,32 +340,10 @@ object RelationalQueries {
       .orderBy(desc("revenue"), col("n_name"))
   }
 
-  val queries: Map[String, Q] = Map(
-    "q97_local_supplier" -> localSupplierRevenue,
-    "q01_pricing_summary" -> pricingSummary,
-    "q02_monthly_shipments" -> monthlyShipments,
-    "q03_star_join" -> starJoin,
-    "q04_revenue_by_nation" -> revenueByNation,
-    "q05_bucket_self_join" -> bucketSelfJoin,
-    "q06_active_users" -> activeUsers,
-    "q07_top_events" -> topEvents,
-    "q08_leaderboard" -> leaderboard,
-    "q09_semi_join" -> semiJoin,
-    "q10_anti_join" -> antiJoin,
-    "q11_set_ops" -> setOps,
-    "q12_top_words" -> topWords,
-    "q13_left_enrich" -> leftEnrich,
-    "q117_set_ops_all" -> setOpsAll,
-    "q125_full_outer" -> fullOuter,
-    "q14_sql_surface" -> sqlSurface,
-    "q72_subqueries" -> subqueries,
-    "q79_filter_clause" -> filterClause,
-    "q80_grouping_sets" -> groupingSets)
-
   import Num.{O => N}
 
-  val oracle: Map[String, String] = Map(
-    "q97_local_supplier" ->
+  val entries: Seq[Entry] = Seq(
+    Entry("q97_local_supplier", localSupplierRevenue,
       s"""SELECT n_name, COUNT(*) AS n_lineitems,
          |  ${N.sum("(l_extendedprice * (1.0 - l_discount))")} AS revenue
          |FROM lineitem l
@@ -377,8 +355,8 @@ object RelationalQueries {
          |WHERE r.r_name = 'ASIA'
          |  AND o.o_orderdate >= TIMESTAMP '1996-01-01'
          |  AND o.o_orderdate < TIMESTAMP '1997-01-01'
-         |GROUP BY n_name ORDER BY revenue DESC, n_name""".stripMargin,
-    "q01_pricing_summary" ->
+         |GROUP BY n_name ORDER BY revenue DESC, n_name""".stripMargin),
+    Entry("q01_pricing_summary", pricingSummary,
       s"""SELECT l_returnflag, l_linestatus,
          |  ${N.sum("l_quantity")} AS sum_qty,
          |  ${N.sum("l_extendedprice")} AS sum_base_price,
@@ -390,8 +368,8 @@ object RelationalQueries {
          |FROM lineitem
          |WHERE l_shipdate <= TIMESTAMP '1998-09-02 00:00:00'
          |GROUP BY l_returnflag, l_linestatus
-         |ORDER BY l_returnflag, l_linestatus""".stripMargin,
-    "q02_monthly_shipments" ->
+         |ORDER BY l_returnflag, l_linestatus""".stripMargin),
+    Entry("q02_monthly_shipments", monthlyShipments,
       s"""SELECT date_trunc('month', l_shipdate) AS ship_month,
          |  COUNT(*) AS n_items,
          |  ${N.sum("l_extendedprice")} AS sum_price,
@@ -400,8 +378,8 @@ object RelationalQueries {
          |WHERE l_shipdate >= TIMESTAMP '1995-01-01 00:00:00'
          |  AND l_shipdate < TIMESTAMP '1997-01-01 00:00:00'
          |  AND l_quantity BETWEEN 5 AND 45
-         |GROUP BY 1 ORDER BY ship_month""".stripMargin,
-    "q03_star_join" ->
+         |GROUP BY 1 ORDER BY ship_month""".stripMargin),
+    Entry("q03_star_join", starJoin,
       s"""SELECT r_name, n_name,
          |  COUNT(*) AS n_customers,
          |  ${N.sum("c_acctbal")} AS sum_acctbal,
@@ -409,14 +387,14 @@ object RelationalQueries {
          |FROM customer
          |JOIN nation ON c_nationkey = n_nationkey
          |JOIN region ON n_regionkey = r_regionkey
-         |GROUP BY r_name, n_name ORDER BY r_name, n_name""".stripMargin,
-    "q04_revenue_by_nation" ->
+         |GROUP BY r_name, n_name ORDER BY r_name, n_name""".stripMargin),
+    Entry("q04_revenue_by_nation", revenueByNation,
       s"""SELECT n_name, COUNT(*) AS n_orders, ${N.sum("o_totalprice")} AS revenue
          |FROM orders JOIN customer ON o_custkey = c_custkey
          |JOIN nation ON c_nationkey = n_nationkey
          |WHERE o_orderdate >= TIMESTAMP '1996-01-01 00:00:00'
-         |GROUP BY n_name ORDER BY n_name""".stripMargin,
-    "q05_bucket_self_join" ->
+         |GROUP BY n_name ORDER BY n_name""".stripMargin),
+    Entry("q05_bucket_self_join", bucketSelfJoin,
       s"""WITH err AS (
          |  SELECT date_trunc('hour', ts) AS bucket, COUNT(*) AS errors,
          |         round(${N.avg("value")}, 6) AS avg_errors
@@ -427,30 +405,30 @@ object RelationalQueries {
          |  FROM events WHERE event_type = 'purchase' GROUP BY 1)
          |SELECT err.bucket AS bucket, errors, avg_errors, purchases, avg_purchases
          |FROM err JOIN pur ON err.bucket = pur.bucket
-         |ORDER BY bucket""".stripMargin,
-    "q06_active_users" ->
+         |ORDER BY bucket""".stripMargin),
+    Entry("q06_active_users", activeUsers,
       s"""SELECT user_id, COUNT(*) AS n_events, ${N.sum("value")} AS sum_value
          |FROM events GROUP BY user_id HAVING COUNT(*) > 70
-         |ORDER BY n_events DESC, user_id""".stripMargin,
-    "q07_top_events" ->
+         |ORDER BY n_events DESC, user_id""".stripMargin),
+    Entry("q07_top_events", topEvents,
       """SELECT event_id, user_id, event_type, value
-        |FROM events ORDER BY value DESC, event_id LIMIT 50""".stripMargin,
-    "q08_leaderboard" ->
+        |FROM events ORDER BY value DESC, event_id LIMIT 50""".stripMargin),
+    Entry("q08_leaderboard", leaderboard,
       """SELECT user_id, COUNT(*) AS n_events,
         |  CAST(SUM(CASE WHEN event_type = 'error' THEN 1 ELSE 0 END) AS BIGINT) AS n_errors,
         |  round(100.0 * CAST(SUM(CASE WHEN event_type = 'error' THEN 1 ELSE 0 END) AS BIGINT) / COUNT(*), 6) AS error_rate_pct
         |FROM events GROUP BY user_id HAVING COUNT(*) > 40
-        |ORDER BY error_rate_pct DESC, user_id LIMIT 25""".stripMargin,
-    "q09_semi_join" ->
+        |ORDER BY error_rate_pct DESC, user_id LIMIT 25""".stripMargin),
+    Entry("q09_semi_join", semiJoin,
       """SELECT c_custkey, c_name, c_mktsegment FROM customer
         |WHERE EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey AND o_totalprice > 400000.0)
-        |ORDER BY c_custkey""".stripMargin,
-    "q10_anti_join" ->
+        |ORDER BY c_custkey""".stripMargin),
+    Entry("q10_anti_join", antiJoin,
       """SELECT c_custkey, c_name FROM customer
         |WHERE NOT EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey
         |                  AND o_orderdate >= TIMESTAMP '2001-01-01 00:00:00')
-        |ORDER BY c_custkey""".stripMargin,
-    "q11_set_ops" ->
+        |ORDER BY c_custkey""".stripMargin),
+    Entry("q11_set_ops", setOps,
       """SELECT user_id, 'purchase_no_error' AS segment FROM (
         |  SELECT DISTINCT user_id FROM events WHERE event_type = 'purchase'
         |  EXCEPT SELECT DISTINCT user_id FROM events WHERE event_type = 'error')
@@ -458,12 +436,12 @@ object RelationalQueries {
         |SELECT user_id, 'purchase_and_signup' AS segment FROM (
         |  SELECT DISTINCT user_id FROM events WHERE event_type = 'purchase'
         |  INTERSECT SELECT DISTINCT user_id FROM events WHERE event_type = 'signup')
-        |ORDER BY segment, user_id""".stripMargin,
-    "q12_top_words" ->
+        |ORDER BY segment, user_id""".stripMargin),
+    Entry("q12_top_words", topWords,
       """SELECT word, COUNT(*) AS n FROM (
         |  SELECT unnest(string_split(text, ' ')) AS word FROM documents)
-        |GROUP BY word ORDER BY n DESC, word LIMIT 20""".stripMargin,
-    "q125_full_outer" ->
+        |GROUP BY word ORDER BY n DESC, word LIMIT 20""".stripMargin),
+    Entry("q125_full_outer", fullOuter,
       s"""WITH p AS (SELECT user_id, COUNT(*) AS n_purchases, ${N.sum("value")} AS spend
          |           FROM events WHERE event_type = 'purchase' GROUP BY 1),
          |e AS (SELECT user_id, COUNT(*) AS n_errors
@@ -476,8 +454,8 @@ object RelationalQueries {
          |       WHEN n_errors IS NULL THEN 'purchases_only'
          |       ELSE 'both' END AS activity
          |FROM p FULL JOIN e USING (user_id)
-         |ORDER BY user_id""".stripMargin,
-    "q117_set_ops_all" ->
+         |ORDER BY user_id""".stripMargin),
+    Entry("q117_set_ops_all", setOpsAll,
       """WITH ea AS (
         |  SELECT user_id, 'purchase_except_all_error' AS segment FROM (
         |    SELECT user_id FROM events WHERE event_type = 'purchase'
@@ -490,8 +468,8 @@ object RelationalQueries {
         |    SELECT user_id FROM events WHERE event_type = 'signup'))
         |SELECT segment, user_id, COUNT(*) AS multiplicity
         |FROM (SELECT * FROM ea UNION ALL SELECT * FROM ia)
-        |GROUP BY 1, 2 ORDER BY segment, user_id""".stripMargin,
-    "q13_left_enrich" ->
+        |GROUP BY 1, 2 ORDER BY segment, user_id""".stripMargin),
+    Entry("q13_left_enrich", leftEnrich,
       s"""WITH o AS (
          |  SELECT o_custkey, COUNT(*) AS n_recent_orders, ${N.sum("o_totalprice")} AS recent_spend
          |  FROM orders WHERE o_orderdate >= TIMESTAMP '2001-01-01 00:00:00'
@@ -500,14 +478,14 @@ object RelationalQueries {
          |  coalesce(n_recent_orders, 0) AS n_recent_orders,
          |  coalesce(recent_spend, 0.0) AS recent_spend
          |FROM customer LEFT JOIN o ON c_custkey = o_custkey
-         |ORDER BY c_custkey""".stripMargin,
-    "q14_sql_surface" ->
+         |ORDER BY c_custkey""".stripMargin),
+    Entry("q14_sql_surface", sqlSurface,
       """SELECT event_id, ts, user_id, value,
         |  json_extract_string(props, '$.k') AS quality
         |FROM events WHERE event_type = 'error'
-        |ORDER BY ts DESC, event_id LIMIT 50""".stripMargin,
-    "q72_subqueries" -> subqueryText,
-    "q79_filter_clause" -> filterClauseText,
-    "q80_grouping_sets" -> groupingSetsText("GROUPING")
+        |ORDER BY ts DESC, event_id LIMIT 50""".stripMargin),
+    Entry("q72_subqueries", subqueries, subqueryText),
+    Entry("q79_filter_clause", filterClause, filterClauseText),
+    Entry("q80_grouping_sets", groupingSets, groupingSetsText("GROUPING"))
   )
 }

@@ -56,9 +56,9 @@ class BloomSpec extends AnyFunSuite with TestSpark {
     // never rows — zero false negatives means the aggregated result is
     // identical for ANY filter sizing
     val dir = "/root/testdata/sf0.001"
-    val plain = graft.warehouse.AnalyticsQueries.queries("q249_semi_plain")(spark, dir)
+    val plain = SparkEntry.queries("q249_semi_plain")(spark, dir)
       .collect().map(_.toSeq).toSeq
-    val bloomed = graft.warehouse.AnalyticsQueries.queries("q250_semi_bloom")(spark, dir)
+    val bloomed = SparkEntry.queries("q250_semi_bloom")(spark, dir)
       .collect().map(_.toSeq).toSeq
     assert(plain.nonEmpty)
     assert(bloomed == plain)
@@ -84,9 +84,9 @@ class BloomSpec extends AnyFunSuite with TestSpark {
         recs.max // the probe-side exchange dominates every other one
       }
       val plain = maxShuffleRecords(
-        graft.warehouse.AnalyticsQueries.queries("q249_semi_plain")(spark, dir))
+        SparkEntry.queries("q249_semi_plain")(spark, dir))
       val bloomed = maxShuffleRecords(
-        graft.warehouse.AnalyticsQueries.queries("q250_semi_bloom")(spark, dir))
+        SparkEntry.queries("q250_semi_bloom")(spark, dir))
       assert(plain >= 5000L, s"plain probe shuffled $plain rows — fixture changed?")
       assert(bloomed * 5 < plain,
         s"bloom probe must cut the shuffle ~10x: bloom=$bloomed plain=$plain")

@@ -36,6 +36,23 @@ class ClusteringSpec extends AnyFunSuite with TestSpark {
     assert(vecs.count(v => v(2) > 0.9f && v.head < 0.1f) == 1)
   }
 
+  test("kmeans frees every superseded round's checkpoint blocks") {
+    // Dataset.unpersist on a local checkpoint frees nothing: the loop
+    // must release the checkpointed RDD itself, or each Lloyd round's
+    // blocks stay in storage until a driver GC
+    def stored = spark.sparkContext.getRDDStorageInfo.map(_.id).toSet
+    val before = stored
+    val cents = Clustering.kmeans(points, k = 2, iters = 3)
+    val finalId = cents.queryExecution.analyzed.collectFirst {
+      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.id
+    }
+    assert(finalId.isDefined)
+    def leaked = stored -- before -- finalId
+    val deadline = System.nanoTime() + 10000000000L
+    while (leaked.nonEmpty && System.nanoTime() < deadline) Thread.sleep(100)
+    assert(leaked.isEmpty, s"superseded rounds still stored: $leaked")
+  }
+
   test("kmeans centroid count is fixed at k, independent of corpus size") {
     // 10× more points, same k: nlist must NOT grow with n (the round-2
     // vec_id%31 quantizer did — the judge's one real 100TB scale flaw).

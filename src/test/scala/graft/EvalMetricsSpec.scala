@@ -331,8 +331,7 @@ class EvalMetricsSpec extends AnyFunSuite with TestSpark {
   }
 
   test("datasetCard is one row with the census invariants") {
-    import graft.warehouse.PipelineQueries
-    val r = PipelineQueries.queries("q308_dataset_card")(spark, "/root/testdata/sf0.001")
+    val r = SparkEntry.queries("q308_dataset_card")(spark, "/root/testdata/sf0.001")
       .collect()
     assert(r.length == 1)
     val row = r.head

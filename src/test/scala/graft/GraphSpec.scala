@@ -168,6 +168,12 @@ class GraphSpec extends AnyFunSuite with TestSpark {
     assert(Seq(1L, 2L).forall(h => r(h)._2 == 0.0), "pure hubs receive no links")
   }
 
+  test("hits on an empty edge set gives no rows instead of throwing") {
+    // the degree guard's max over no rows is NULL: it must read as 0
+    val none = Seq.empty[(Long, Long)].toDF("src", "dst")
+    assert(Graph.hits(none, iters = 2).count() == 0)
+  }
+
   test("hits fails fast past the bigint micro-unit degree headroom") {
     // the documented bound (deg * 10^6 * 10^6 must fit a BIGINT) is
     // ENFORCED, not just documented: exceeding it must throw before
