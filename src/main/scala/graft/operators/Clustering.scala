@@ -122,36 +122,42 @@ object Clustering {
     * hash-sampled training subset (`trainPct` < 100): the quantizer is
     * trained on a sample — the full corpus is only ever ASSIGNED, never
     * used to update means — which is how a real IVF coarse quantizer is
-    * fit at scale. Returns the final (cluster_id, cemb). Iterations
-    * localCheckpoint so the plan does not grow (same lesson as
-    * Dedup.connectedComponents).
+    * fit at scale. Returns the final (cluster_id, cemb).
     */
   def kmeans(emb: DataFrame, k: Int = 16, iters: Int = 5, trainPct: Int = 100,
       dim: Int = EmbDim): DataFrame =
-    kmeansWith(step(_, _, dim), emb, k, iters, trainPct)
+    kmeansWith(cosine = true, emb, k, iters, trainPct, dim)
 
   /** The shared Lloyd scaffold (hash seeding, optional hash-sampled
-    * training subset, localCheckpoint-per-iteration) — the metric
-    * variants differ only in their step function.
+    * training subset) — the variants differ only in their metric
+    * (cosine or squared L2). A sample of at most `localMaxRows` rows trains on the
+    * driver ([[LocalLloyd]], one collect, bit-identical); a larger one
+    * runs the distributed loop, which localCheckpoints every round so
+    * the plan does not grow (same lesson as Dedup.connectedComponents).
+    * `localMaxRows` = 0 forces the distributed loop.
     */
-  private def kmeansWith(stepFn: (DataFrame, DataFrame) => DataFrame,
-      emb: DataFrame, k: Int, iters: Int, trainPct: Int): DataFrame = {
-    // cached for the loop only: seeding + every Lloyd round re-reads
-    // the training sample (iters+1 corpus scans without the pin); the
-    // loop is eager (localCheckpoint per round), so the pin is released
-    // as soon as the final centroids are materialized — no cache
-    // outlives the call
+  private[graft] def kmeansWith(cosine: Boolean, emb: DataFrame, k: Int, iters: Int,
+      trainPct: Int, dim: Int, localMaxRows: Int = LocalLloyd.LocalTrainMaxRows): DataFrame = {
     val train = (if (trainPct >= 100) emb else Sampling.hashSample(emb, "vec_id", trainPct))
       .select("vec_id", "embedding")
-      .cache()
-    var centroids = seedCentroids(train, k).localCheckpoint(true)
-    for (_ <- 1 to iters) {
-      val prev = centroids
-      centroids = stepFn(train, centroids).localCheckpoint(true)
-      Materialized.release(prev)
+    LocalLloyd.kmeans(train, k, iters, dim, cosine, localMaxRows).getOrElse {
+      val stepFn: (DataFrame, DataFrame) => DataFrame =
+        if (cosine) step(_, _, dim) else stepL2(_, _, dim)
+      // cached for the loop only: seeding + every Lloyd round re-reads
+      // the training sample (iters+1 corpus scans without the pin); the
+      // loop is eager (localCheckpoint per round), so the pin is
+      // released as soon as the final centroids are materialized — no
+      // cache outlives the call
+      train.cache()
+      var centroids = seedCentroids(train, k).localCheckpoint(true)
+      for (_ <- 1 to iters) {
+        val prev = centroids
+        centroids = stepFn(train, centroids).localCheckpoint(true)
+        Materialized.release(prev)
+      }
+      train.unpersist()
+      centroids
     }
-    train.unpersist()
-    centroids
   }
 
   /** Nearest-centroid assignment by SQUARED L2 distance (ties → lowest
@@ -179,12 +185,12 @@ object Clustering {
     meanVectors(assignL2(emb, centroids), dim)
 
   /** [[kmeans]] under squared-L2 assignment — identical seeding,
-    * sampling, and localCheckpoint discipline; only the metric differs.
+    * sampling and driver-local/distributed split; only the metric differs.
     * Used per subspace by Similarity's product quantizer.
     */
   def kmeansL2(emb: DataFrame, k: Int = 16, iters: Int = 5, trainPct: Int = 100,
       dim: Int = EmbDim): DataFrame =
-    kmeansWith(stepL2(_, _, dim), emb, k, iters, trainPct)
+    kmeansWith(cosine = false, emb, k, iters, trainPct, dim)
 
   val PcaIters = 4
 

@@ -513,11 +513,9 @@ object Dedup {
     * this runs on, while covering every near-dup pair graph a blocked/
     * banded generator emits at 100 TB (pair graphs are near-dup-sized,
     * not corpus-sized). Above it the distributed pointer-jumping loop
-    * takes over unchanged. Overridable per-JVM via
-    * -Dgraft.cc.local.max.edges.
+    * takes over unchanged; specs force it with `localEdgeThreshold = 0`.
     */
-  private[graft] def LocalSolveMaxEdges: Long =
-    sys.props.get("graft.cc.local.max.edges").map(_.toLong).getOrElse(2000000L)
+  private[graft] val LocalSolveMaxEdges: Long = 2000000L
 
   /** Driver union-find with path compression + union by min label. */
   private def localSolve(spark: org.apache.spark.sql.SparkSession, sym: DataFrame): DataFrame = {

@@ -938,10 +938,24 @@ object Similarity {
     * audit measured recall@10 0.14 / 0.275 / 0.385 at M = 4 / 8 / 16 on
     * the testdata embeddings (K is capped by the sf0.001 training
     * sample; at real scale prefer K = 256-byte codes).
+    *
+    * A sample of at most [[LocalLloyd.LocalTrainMaxRows]] rows trains on
+    * the driver (one collect, bit-identical); a larger one runs the
+    * distributed loop below.
     */
-  def pqCodebooks(emb: DataFrame): DataFrame = {
-    import graft.functions.{Hashes, Num}
+  def pqCodebooks(emb: DataFrame): DataFrame = pqCodebooks(emb, LocalLloyd.LocalTrainMaxRows)
+
+  /** [[pqCodebooks]] with the driver-local row bound as a parameter;
+    * 0 forces the distributed loop.
+    */
+  private[graft] def pqCodebooks(emb: DataFrame, localMaxRows: Int): DataFrame = {
     val train = Sampling.hashSample(emb, "vec_id", IvfTrainPct).select("vec_id", "embedding")
+    LocalLloyd.pqCodebooks(train, PqM, PqSubDim, PqK, IvfIters, localMaxRows)
+      .getOrElse(pqCodebooksDistributed(train))
+  }
+
+  private def pqCodebooksDistributed(train: DataFrame): DataFrame = {
+    import graft.functions.Hashes
     val subs = train.select(col("vec_id"),
       posexplode(array((0 until PqM).map(m =>
         slice(col("embedding"), m * PqSubDim + 1, PqSubDim)): _*)).as(Seq("m", "sub")))
@@ -1061,29 +1075,20 @@ object Similarity {
     * m·PqK+code), so scoring is a |corpus|×|Q| broadcast join with a
     * 16-lookup in-row fold — the former long-form join on (m, code)
     * pushed |corpus|·PqM·|Q| rows through the shuffle, PqM× more. The
-    * 16 lookups sum through a BALANCED tree of exact decimal adds
-    * (terms cast DECIMAL(25,12), the 12-dp scale of the former
-    * sum(cast) aggregate; tree depth 4 grows precision only to 29, so
-    * no add ever hits the 38-digit cap where Spark would shave scale —
-    * and decimal addition is associative-exact, so the tree equals any
-    * aggregation order) — ADC values, ties (break on cand_id), and the
-    * oracle are unchanged.
+    * 16 lookups are folded as doubles in subspace (`m`) order, like
+    * [[pqSummary]]'s recon_err, and the oracle replays the same fold.
+    * No per-row decimal cast: Spark rounds a double's shortest decimal
+    * string, DuckDB its exact binary value, so the two disagree on
+    * values such as 0.0163183249065.
     */
   /** The packed-ADC scoring expression over `codes` (m-ordered code
     * array) and `lut` (flat m·PqK+code lookup array): 16 in-row lookups
-    * summed through a balanced tree of exact decimal adds — see
-    * [[pqAdcTopK]]'s scaladoc for the precision argument.
+    * folded left from 0.0 in `m` order.
     */
-  private def adcDist: Column = {
-    def balancedSum(xs: Seq[Column]): Column =
-      if (xs.size == 1) xs.head
-      else balancedSum(xs.grouped(2).map(g =>
-        if (g.size == 2) g(0) + g(1) else g(0)).toSeq)
-    balancedSum((0 until PqM).map(m =>
-      element_at(col("lut"),
-        (lit(m * PqK) + element_at(col("codes"), m + 1) + 1).cast("int"))
-        .cast("decimal(25,12)"))).cast("double")
-  }
+  private def adcDist: Column =
+    (0 until PqM).foldLeft(lit(0d)) { (acc, m) =>
+      acc + element_at(col("lut"), (lit(m * PqK) + element_at(col("codes"), m + 1) + 1).cast("int"))
+    }
 
   /** Packs long-form (…, m, code) rows into one m-ordered `codes` array
     * per group — the candidate side of packed ADC.
@@ -1774,7 +1779,7 @@ object Similarity {
          |cnd AS (SELECT e.vec_id AS cand_id, e.m, e.code, a.cent_id
          |        FROM enc e JOIN asg a ON a.vec_id = e.vec_id),
          |prs AS (SELECT l.query_id, cn.cand_id,
-         |          CAST(SUM(CAST(l.d2 AS DECIMAL(38,12))) AS DOUBLE) AS adc_dist
+         |          list_reduce(list_prepend(CAST(0 AS DOUBLE), list(l.d2 ORDER BY l.m)), (a, b) -> a + b) AS adc_dist
          |        FROM cnd cn JOIN lut l ON cn.cent_id = l.cent_id AND cn.m = l.m AND cn.code = l.code
          |          AND cn.cand_id != l.query_id
          |        GROUP BY l.query_id, cn.cand_id)
@@ -1795,7 +1800,7 @@ object Similarity {
          |lut AS (SELECT q.query_id, q.m, c.code, ${V.O.l2sq("q.qsub", "c.cemb", PqSubDim)} AS d2
          |  FROM q JOIN cb c ON q.m = c.m),
          |prs AS (SELECT l.query_id, e.vec_id AS cand_id,
-         |    CAST(SUM(CAST(l.d2 AS DECIMAL(38,12))) AS DOUBLE) AS adc_dist
+         |    list_reduce(list_prepend(CAST(0 AS DOUBLE), list(l.d2 ORDER BY l.m)), (a, b) -> a + b) AS adc_dist
          |  FROM enc e JOIN lut l ON e.m = l.m AND e.code = l.code AND e.vec_id != l.query_id
          |  GROUP BY l.query_id, e.vec_id)
          |SELECT query_id, cand_id, adc_dist, rank FROM (

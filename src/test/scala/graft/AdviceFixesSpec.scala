@@ -199,13 +199,17 @@ class AdviceFixesSpec extends AnyFunSuite with TestSpark {
   }
 
   test("kmeans fails loudly on embeddings wider than dim instead of truncating") {
-    import graft.operators.Clustering
+    import graft.operators.{Clustering, LocalLloyd}
     val wide = Seq.tabulate(6)(i => (i.toLong, Array.fill(Clustering.EmbDim + 1)((i + 1).toFloat)))
       .toDF("vec_id", "embedding")
-    val e = intercept[Exception] {
-      Clustering.kmeans(wide, k = 2, iters = 1).collect()
+    // driver-local path, then the distributed loop
+    for (localMaxRows <- Seq(LocalLloyd.LocalTrainMaxRows, 0)) {
+      val e = intercept[Exception] {
+        Clustering.kmeansWith(cosine = true, wide, k = 2, iters = 1, trainPct = 100,
+          dim = Clustering.EmbDim, localMaxRows).collect()
+      }
+      assert(messageChain(e).contains("exceeds dim=64"), messageChain(e).take(500))
     }
-    assert(messageChain(e).contains("exceeds dim=64"), messageChain(e).take(500))
   }
 
   test("incrementalAssignment emits 0.0 shares, not NULL/inf, on an empty split") {

@@ -39,10 +39,12 @@ class ClusteringSpec extends AnyFunSuite with TestSpark {
   test("kmeans frees every superseded round's checkpoint blocks") {
     // Dataset.unpersist on a local checkpoint frees nothing: the loop
     // must release the checkpointed RDD itself, or each Lloyd round's
-    // blocks stay in storage until a driver GC
+    // blocks stay in storage until a driver GC (localMaxRows = 0 runs
+    // the distributed loop; a sample this small trains on the driver)
     def stored = spark.sparkContext.getRDDStorageInfo.map(_.id).toSet
     val before = stored
-    val cents = Clustering.kmeans(points, k = 2, iters = 3)
+    val cents = Clustering.kmeansWith(cosine = true, points, k = 2, iters = 3,
+      trainPct = 100, dim = Clustering.EmbDim, localMaxRows = 0)
     val finalId = cents.queryExecution.analyzed.collectFirst {
       case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.id
     }
@@ -110,11 +112,14 @@ class ClusteringSpec extends AnyFunSuite with TestSpark {
       (i.toLong, Array(a.toFloat, b.toFloat, c.toFloat, 0f))
     }
     val df = rows.toDF("vec_id", "embedding")
-    val c0 = Clustering.centeredCorpus(df); c0.cache()
-    val pc1 = Clustering.topPrincipalComponent(c0); pc1.cache()
-    val r1 = Clustering.projectOut(c0, pc1); r1.cache()
-    val pc2 = Clustering.topPrincipalComponent(r1); pc2.cache()
-    val r2 = Clustering.projectOut(r1, pc2); r2.cache()
+    // each step is an eager local checkpoint, as the product chain's
+    // Materialized artifacts are: cached steps nest every ancestor's
+    // InMemoryRelation, and each AQE re-plan renders the whole nest
+    val c0 = Clustering.centeredCorpus(df).localCheckpoint()
+    val pc1 = Clustering.topPrincipalComponent(c0).localCheckpoint()
+    val r1 = Clustering.projectOut(c0, pc1).localCheckpoint()
+    val pc2 = Clustering.topPrincipalComponent(r1).localCheckpoint()
+    val r2 = Clustering.projectOut(r1, pc2).localCheckpoint()
     val pc3 = Clustering.topPrincipalComponent(r2)
     def lam(pc: org.apache.spark.sql.DataFrame) =
       pc.agg(org.apache.spark.sql.functions.max($"eigenvalue")).head.getDouble(0)
@@ -131,7 +136,7 @@ class ClusteringSpec extends AnyFunSuite with TestSpark {
       pc.orderBy("dim").collect().map(_.getDouble(1))
     val dot12 = vec(pc1).zip(vec(pc2)).map { case (x, y) => x * y }.sum
     assert(math.abs(dot12) < 0.05, s"v1·v2 = $dot12")
-    Seq(c0, pc1, r1, pc2, r2).foreach(_.unpersist())
+    Seq(c0, pc1, r1, pc2, r2).foreach(graft.warehouse.Materialized.release)
   }
 
   test("mean pairwise cosine matches the hand count; zero vectors excluded") {

@@ -158,10 +158,10 @@ class PqSpec extends AnyFunSuite with TestSpark {
     val queries = corpus.filter(_._1 < 3)
     val expected = queries.flatMap { case (qid, qv) =>
       val dists = corpus.filter(_._1 != qid).map { case (cid, cv) =>
-        val adc = codesOf(cv).zipWithIndex.foldLeft(BigDecimal(0)) { case (acc, (code, m)) =>
-          val qs = qv.slice(m * sub, (m + 1) * sub).toSeq
-          acc + BigDecimal(l2sq(qs, cb((m, code)))).setScale(12, BigDecimal.RoundingMode.HALF_UP)
-        }.toDouble
+        // the m-ordered double fold of the 16 lookups
+        val adc = codesOf(cv).zipWithIndex.foldLeft(0d) { case (acc, (code, m)) =>
+          acc + l2sq(qv.slice(m * sub, (m + 1) * sub).toSeq, cb((m, code)))
+        }
         (cid, adc)
       }
       dists.sortBy { case (cid, d) => (d, cid) }.take(k).zipWithIndex
@@ -172,7 +172,32 @@ class PqSpec extends AnyFunSuite with TestSpark {
     assert(got.keySet == expected.keySet)
     for ((key, (d, r)) <- expected) {
       assert(got(key)._2 == r, s"rank for $key")
-      assert(math.abs(got(key)._1 - d) < 1e-9, s"adc_dist for $key")
+      assert(got(key)._1 == d, s"adc_dist for $key")
     }
+  }
+
+  test("pq adc_dist is the m-ordered double fold, not a per-row decimal sum") {
+    // one zero codeword per subspace, so each lookup is the query
+    // subvector's squared first element; m = 6 sits next to the q155
+    // seed value 0.0163183249065, whose decimal(38,12) cast Spark and
+    // DuckDB round apart
+    val perM = Seq(0.01, 0.01919, 0.01838, 0.01757, 0.01676, 0.01595, 0.0163183249065, 0.01433,
+      0.01352, 0.01271, 0.0119, 0.01109, 0.01028, 0.01947, 0.01866, 0.01785)
+    val lead = perM.map(x => math.sqrt(x).toFloat)
+    val d2 = lead.map(x => x.toDouble * x.toDouble)
+    val fold = d2.foldLeft(0d)(_ + _)
+    // the former per-row cast (Spark rounds the shortest decimal string)
+    // lands elsewhere, so this case tells the two apart
+    val decimalSum = d2.map(x => BigDecimal(x.toString).setScale(12, BigDecimal.RoundingMode.HALF_UP))
+      .sum.toDouble
+    assert(decimalSum != fold)
+    val query = Array.tabulate(dim)(j => if (j % Similarity.PqSubDim == 0) lead(j / Similarity.PqSubDim) else 0f)
+    val emb = ((0L, query) +: (1L to 3L).map(i => (i, mkVec(i)))).toDF("vec_id", "embedding")
+    val cb = (0 until Similarity.PqM).map(m => (m, 0, Array.fill(Similarity.PqSubDim)(0f)))
+      .toDF("m", "code", "cemb")
+    val got = Similarity.pqAdcTopK(emb, col("vec_id") === 0L, k = 3, codebooks = Some(cb)).collect()
+      .sortBy(_.getInt(3))
+    assert(got.map(_.getLong(1)).toSeq == Seq(1L, 2L, 3L))
+    assert(got.forall(_.getDouble(2) == fold), got.map(_.getDouble(2)).mkString(","))
   }
 }
