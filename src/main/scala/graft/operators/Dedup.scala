@@ -1,11 +1,12 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, LongType, StructType}
 
 import graft.functions.{Hashes, Text}
-import graft.warehouse.Materialized
+import graft.warehouse.{Materialized, Pins}
 
 /** Deduplication family for LLM-data pipelines: exact, MinHash+LSH,
   * SimHash, and n-gram Jaccard.
@@ -258,7 +259,13 @@ object Dedup {
     * contract, mirrored in the oracle), keyed self-join, exact Jaccard
     * against the UNCAPPED shingle-set sizes.
     */
-  def ngramJaccardPairs(docs: DataFrame): DataFrame = {
+  def ngramJaccardPairs(docs: DataFrame): DataFrame =
+    ngramJaccardPairs(docs, LocalOverlapMaxDocs)
+
+  /** [[ngramJaccardPairs]]; specs force the distributed pair count with
+    * `localMaxDocs = 0`.
+    */
+  private[graft] def ngramJaccardPairs(docs: DataFrame, localMaxDocs: Int): DataFrame = {
     // Shingles are hashed to 32-bit ints before the joins: the shuffle
     // key shrinks from ~25-byte strings to 8-byte longs (the standard
     // hashed-shingling approximation; the oracle hashes identically, so
@@ -270,7 +277,7 @@ object Dedup {
     // The per-doc set size rides along through the explode (it is
     // functionally dependent on doc_id, so grouping by it is free):
     // no separate `sizes` aggregation, and no post-pair lookup joins.
-    overlapPairs(docs)
+    overlapPairs(docs, localMaxDocs)
       .withColumn("jaccard",
         round(col("n_common").cast("double") / (col("n1") + col("n2") - col("n_common")), 6))
       .filter(col("jaccard") >= JaccardThreshold)
@@ -282,7 +289,7 @@ object Dedup {
     * shingles to another generator.
     */
   private[graft] def ngramJaccardPairsFrom(shArr: DataFrame): DataFrame =
-    overlapPairsFrom(shArr)
+    overlapPairsFrom(shArr, LocalOverlapMaxDocs)
       .withColumn("jaccard",
         round(col("n_common").cast("double") / (col("n1") + col("n2") - col("n_common")), 6))
       .filter(col("jaccard") >= JaccardThreshold)
@@ -298,7 +305,13 @@ object Dedup {
     * doc-frequency cap — never all-pairs.
     */
   def containmentPairs(docs: DataFrame): DataFrame =
-    overlapPairs(docs)
+    containmentPairs(docs, LocalOverlapMaxDocs)
+
+  /** [[containmentPairs]]; specs force the distributed pair count with
+    * `localMaxDocs = 0`.
+    */
+  private[graft] def containmentPairs(docs: DataFrame, localMaxDocs: Int): DataFrame =
+    overlapPairs(docs, localMaxDocs)
       .withColumn("containment",
         round(col("n_common").cast("double") / least(col("n1"), col("n2")), 6))
       .filter(col("containment") >= ContainmentThreshold)
@@ -341,29 +354,145 @@ object Dedup {
 
   /** Shared candidate generation for the set-overlap family: per-doc
     * hashed distinct shingles → doc-frequency cap → keyed self-join →
-    * (d1, d2, n1, n2, n_common) per intersecting pair.
+    * (d1, d2, n1, n2, n_common) per intersecting pair. A corpus of at
+    * most `localMaxDocs` documents is counted on the driver
+    * ([[localOverlapPairs]]); a larger one, or one the local count
+    * declines, runs the distributed join.
     */
-  private def overlapPairs(docs: DataFrame): DataFrame =
-    overlapPairsFrom(shingleSets(docs))
+  private def overlapPairs(docs: DataFrame, localMaxDocs: Int): DataFrame =
+    overlapPairsFrom(shingleSets(docs), localMaxDocs)
 
-  private def overlapPairsFrom(shArr: DataFrame): DataFrame = {
+  private def overlapPairsFrom(shArr: DataFrame, localMaxDocs: Int): DataFrame = {
     // hashing the already-distinct string set then re-distincting over
     // the hashes is set-identical to the historical transform-then-
     // distinct order (a rare md5Long32 collision collapses either way)
-    val sh = shArr
-      .select(col("doc_id"),
-        array_distinct(transform(col("sh_arr"), s => Hashes.md5Long32(s))).as("arr"))
-      .select(col("doc_id"), size(col("arr")).cast("long").as("n"), explode(col("arr")).as("sh"))
-      .cache()
-    val rare = sh.groupBy("sh").agg(count(lit(1)).as("df")).filter(col("df") <= JaccardDocFreqCap)
-    // cached: the self-join below reads it twice (sh is cached, but the
-    // df-cap join would still run once per side)
-    val filtered = sh.join(rare.select("sh"), "sh").cache()
-    filtered.as("a")
-      .join(filtered.as("b"), col("a.sh") === col("b.sh") && col("a.doc_id") < col("b.doc_id"))
-      .groupBy(col("a.doc_id").as("d1"), col("b.doc_id").as("d2"),
-        col("a.n").as("n1"), col("b.n").as("n2"))
-      .agg(count(lit(1)).as("n_common"))
+    val hashed = shArr.select(col("doc_id"),
+      array_distinct(transform(col("sh_arr"), s => Hashes.md5Long32(s))).as("arr"))
+    def distributed(pin: DataFrame => DataFrame): DataFrame = {
+      val sh = pin(hashed
+        .select(col("doc_id"), size(col("arr")).cast("long").as("n"), explode(col("arr")).as("sh")))
+      val rare = sh.groupBy("sh").agg(count(lit(1)).as("df")).filter(col("df") <= JaccardDocFreqCap)
+      // pinned: the self-join below reads it twice (sh is pinned, but
+      // the df-cap join would still run once per side)
+      val filtered = pin(sh.join(rare.select("sh"), "sh"))
+      filtered.as("a")
+        .join(filtered.as("b"), col("a.sh") === col("b.sh") && col("a.doc_id") < col("b.doc_id"))
+        .groupBy(col("a.doc_id").as("d1"), col("b.doc_id").as("d2"),
+          col("a.n").as("n1"), col("b.n").as("n2"))
+        .agg(count(lit(1)).as("n_common"))
+    }
+    // the unpinned plan only supplies the schema (analysis, no job)
+    localOverlapPairs(hashed, distributed(identity).schema, localMaxDocs)
+      .getOrElse(distributed(Pins.cache))
+  }
+
+  /** Document ceiling of the driver-local overlap count: the collect
+    * holds at most this many (doc_id, hashed shingle set) rows.
+    */
+  private[graft] val LocalOverlapMaxDocs = 8192
+
+  /** Set-size ceiling of one collected document (a text of about 514
+    * words); a larger document sends the corpus to the distributed
+    * join. Memory math: with [[LocalOverlapMaxDocs]] the collect holds
+    * at most 4M hashes, 8 B each, and the sorted (hash, doc) keys as
+    * many again: ≤ 64 MiB. The 5,000-document sf0.1 corpus (at most 100
+    * words a document) holds about 0.26M.
+    */
+  private[graft] val LocalOverlapMaxSetSize = 512
+
+  /** Distinct-pair ceiling of the local count, checked while counting.
+    * Memory math: the pair map is a `LongMap[Int]` (an 8 B key and a
+    * 4 B reference a slot, at most 4 slots a pair: ≤ 96 MiB at 2M
+    * pairs); while the local frame is built each pair is held as a
+    * `Row` and its converted internal row, about 150 B (≤ 300 MiB at
+    * 2M pairs). The sf0.1 corpus has about 1.1M candidate pairs, the
+    * sf0.01 one about 12k. A pair graph past the cap (a corpus whose
+    * rare shingles are shared widely) goes to the distributed join.
+    */
+  private[graft] val LocalOverlapMaxPairs = 2097152
+
+  /** The distributed overlap count done on the driver: one bounded
+    * collect of (doc_id, hashed shingle set), a document-frequency count
+    * per hash, and n_common per pair of documents sharing a hash whose
+    * frequency is at most [[JaccardDocFreqCap]]. Returns a local frame
+    * with the distributed `schema`, or None when the corpus passes a
+    * cap, `localMaxDocs` ≤ 0, or an input the local count does not
+    * reproduce exactly: a doc_id that is not an int or long, null, or
+    * repeated, or a null hash. Oversized sets are refused on the
+    * executors, so the collect itself stays bounded.
+    */
+  private def localOverlapPairs(hashed: DataFrame, schema: StructType,
+      localMaxDocs: Int): Option[DataFrame] = {
+    require(localMaxDocs <= LocalOverlapMaxDocs, s"the packed keys hold at most $LocalOverlapMaxDocs docs")
+    val idType = hashed.schema("doc_id").dataType
+    if (localMaxDocs <= 0 || !(idType == IntegerType || idType == LongType)) return None
+    val spark = hashed.sparkSession
+    import spark.implicits._
+    val arr = col("arr")
+    val ok = col("doc_id").isNotNull &&
+      coalesce(size(arr) <= LocalOverlapMaxSetSize && forall(arr, _.isNotNull), lit(true))
+    val rows = hashed
+      .select(coalesce(col("doc_id").cast("long"), lit(0L)), ok, when(ok, arr))
+      .limit(localMaxDocs + 1)
+      .as[(Long, Boolean, Array[Long])]
+      .collect()
+    if (rows.length > localMaxDocs || rows.exists(!_._2)) return None
+    val sorted = rows.sortBy(_._1)
+    val ids = sorted.map(_._1)
+    if ((1 until ids.length).exists(i => ids(i) == ids(i - 1))) return None
+    // a null set (null text) emits no shingle rows on the distributed path
+    val sets = sorted.map(r => if (r._3 == null) Array.emptyLongArray else r._3)
+    val nEntries = sets.iterator.map(_.length).sum
+
+    // (hash << 14 | doc index), sorted: each hash's run lists its
+    // documents in doc_id order; md5Long32 hashes are 32-bit
+    val docBits = 14
+    val docMask = (1L << docBits) - 1
+    val keys = new Array[Long](nEntries)
+    var k = 0
+    var d = 0
+    while (d < sets.length) {
+      val set = sets(d)
+      var j = 0
+      while (j < set.length) {
+        if (set(j) < 0L || set(j) >= (1L << 32)) return None
+        keys(k) = set(j) << docBits | d
+        k += 1
+        j += 1
+      }
+      d += 1
+    }
+    java.util.Arrays.sort(keys)
+    val common = scala.collection.mutable.LongMap.empty[Int] // (d1 << 14 | d2) -> n_common
+    var i = 0
+    while (i < keys.length) {
+      var end = i + 1
+      while (end < keys.length && (keys(end) >>> docBits) == (keys(i) >>> docBits)) end += 1
+      if (end - i <= JaccardDocFreqCap) {
+        var a = i
+        while (a < end) {
+          var b = a + 1
+          while (b < end) {
+            val pair = (keys(a) & docMask) << docBits | (keys(b) & docMask)
+            common(pair) = common.getOrElse(pair, 0) + 1
+            b += 1
+          }
+          a += 1
+        }
+        if (common.size > LocalOverlapMaxPairs) return None
+      }
+      i = end
+    }
+    val id: Long => Any = if (idType == IntegerType) _.toInt else identity
+    val pairs = common.keysIterator.toArray
+    java.util.Arrays.sort(pairs)
+    val out = new java.util.ArrayList[Row](pairs.length)
+    pairs.foreach { p =>
+      val (a, b) = ((p >>> docBits).toInt, (p & docMask).toInt)
+      out.add(Row(id(ids(a)), id(ids(b)), sets(a).length.toLong, sets(b).length.toLong,
+        common(p).toLong))
+    }
+    Some(spark.createDataFrame(out, schema))
   }
 
   /** Edit-distance near-dup pairs — the fuzzy-match family member the
@@ -475,21 +604,24 @@ object Dedup {
       maxIters: Int = 25,
       localEdgeThreshold: Long = LocalSolveMaxEdges): DataFrame = {
     val spark = pairs.sparkSession
-    val sym = pairs.select(col("d1").as("src"), col("d2").as("dst"))
+    import spark.implicits._
+    val edges = pairs.select(col("d1").as("src"), col("d2").as("dst"))
       .unionByName(pairs.select(col("d2").as("src"), col("d1").as("dst")))
       .distinct()
-      .localCheckpoint(true)
-    val nEdges = sym.count()
-    if (nEdges <= localEdgeThreshold) {
-      // Adaptive local solve: the pair graph is orders of magnitude
-      // smaller than the corpus that produced it. Below the threshold a
-      // driver union-find (one collect, exact, microseconds) beats an
-      // O(log n)-round distributed loop whose every round pays several
-      // Spark jobs of fixed latency — the same small-side adaptivity as
-      // a broadcast join. Above the threshold the distributed
-      // pointer-jumping loop takes over unchanged.
-      localSolve(spark, sym)
-    } else {
+    // Adaptive local solve: the pair graph is orders of magnitude
+    // smaller than the corpus that produced it. Below the threshold a
+    // driver union-find (one bounded collect, exact, microseconds)
+    // beats an O(log n)-round distributed loop whose every round pays
+    // several Spark jobs of fixed latency — the same small-side
+    // adaptivity as a broadcast join.
+    val local =
+      if (localEdgeThreshold <= 0) None
+      else {
+        val bound = math.min(localEdgeThreshold, LocalSolveMaxEdges).toInt
+        Some(edges.limit(bound + 1).as[(Long, Long)].collect()).filter(_.length <= bound)
+      }
+    local.map(localSolve(spark, _)).getOrElse {
+      // Above the threshold the distributed pointer-jumping loop runs.
       // Iterate at parallelism scaled to the edge count, not the
       // corpus' shuffle setting — via explicit repartition of the loop
       // frames, never by mutating the session conf (a shared session's
@@ -499,6 +631,8 @@ object Dedup {
       // GraftSession/tune) merges them down to the data's actual size
       // each round, so a 2000-partition production session doesn't pay
       // 2000 near-empty tasks per iteration.
+      val sym = edges.localCheckpoint(true)
+      val nEdges = sym.count()
       val sessionShuffle = spark.conf.get("spark.sql.shuffle.partitions").toLong
       val p = math.max(2L, math.min(sessionShuffle, nEdges / 100000L + 1L)).toInt
       connectedComponentsLoop(sym.repartition(p, col("dst")).localCheckpoint(true), maxIters, p)
@@ -518,9 +652,8 @@ object Dedup {
   private[graft] val LocalSolveMaxEdges: Long = 2000000L
 
   /** Driver union-find with path compression + union by min label. */
-  private def localSolve(spark: org.apache.spark.sql.SparkSession, sym: DataFrame): DataFrame = {
+  private def localSolve(spark: org.apache.spark.sql.SparkSession, edges: Array[(Long, Long)]): DataFrame = {
     import spark.implicits._
-    val edges = sym.as[(Long, Long)].collect()
     val parent = scala.collection.mutable.LongMap[Long]()
     def find(x: Long): Long = {
       var r = x

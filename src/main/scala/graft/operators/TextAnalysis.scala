@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.functions.{Hashes, Text}
+import graft.warehouse.Pins
 
 /** Text-analysis operators for LLM-data pipelines: token stats, quality
   * scoring, heuristic language ID, and rolling-hash fingerprinting.
@@ -174,13 +175,13 @@ object TextAnalysis {
     // bigrams (≈¼ the occurrence volume), and each occurrence's ln
     // contributes as n × decimal(lp) — bit-identical to summing n
     // copies, so the occurrence-stream oracle still hash-matches.
-    val docBg = docs
+    // pinned: the distinct-bigram table feeds the corpus count rollup
+    // AND the scoring join — without the pin the corpus explode runs
+    // twice. Inside an artifact build (the quality gate) the pin is
+    // released once the artifact is checkpointed.
+    val docBg = Pins.cache(docs
       .select(col("doc_id"), explode(Text.shingles(col(textCol), 2)).as("bg"))
-      .groupBy("doc_id", "bg").agg(count(lit(1)).as("n"))
-      // cached: the distinct-bigram table feeds the corpus count rollup
-      // AND the scoring join — without the pin the corpus explode runs
-      // twice (and three more times through every qualityGate composition)
-      .cache()
+      .groupBy("doc_id", "bg").agg(count(lit(1)).as("n")))
     val bgCounts = docBg.groupBy("bg").agg(sum(col("n")).as("c_bg"))
     val w1Counts = bgCounts
       .groupBy(split(col("bg"), " ").getItem(0).as("w1"))

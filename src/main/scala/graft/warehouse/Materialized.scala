@@ -1,6 +1,7 @@
 package graft.warehouse
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.storage.StorageLevel
 
 /** Session-scoped registry of materialized CORPUS-SNAPSHOT ARTIFACTS —
   * the deterministic derived frames several queries share: the near-dup
@@ -8,8 +9,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * list, the q105 decision list, the q133 funnel, the q146 decision
   * table, and the q191 deletion audit), the trained coarse quantizers
   * and PQ codebooks (one Lloyd trajectory feeds every IVF/PQ consumer),
-  * and the ANN audit rankings (one exact scan and one IVF search feed
-  * the recall/MRR/nDCG/RBO/hubness audits).
+  * the ANN audit rankings (one exact scan and one IVF search feed the
+  * recall/MRR/nDCG/RBO/hubness audits), and the quality gate (q100,
+  * q133, q146).
   *
   * This is the materialized-view pattern a production deployment runs
   * explicitly: the cluster map and the index artifacts are WRITTEN once
@@ -59,8 +61,12 @@ object Materialized {
         // harness; a multi-executor deployment should route artifacts
         // that must survive executor loss through [[Materialized.onDisk]]
         // (the parquet path) instead of this in-session registry.
+        //
+        // The build runs inside a pin scope ([[Pins]]): the scratch
+        // frames it pinned are released once the checkpoint holds the
+        // result, since nothing reads them after that.
         val t0 = System.nanoTime()
-        val f = build().localCheckpoint(true)
+        val f = Pins.scoped(build().localCheckpoint(true))
         recordBuild(name, System.nanoTime() - t0)
         built = Some(f)
         f
@@ -217,5 +223,51 @@ object Materialized {
       }
     }
     s.read.parquet(path.toString)
+  }
+}
+
+/** Scoped pins for artifact builds. An artifact builder often caches a
+  * scratch frame that two of its subtrees read (the exploded shingle
+  * table of the pair generator, the per-doc bigram table of the LM
+  * score). Once [[Materialized]] has checkpointed the artifact, no
+  * consumer reads those frames again, so every [[Materialized.of]]
+  * build runs in a scope that releases them.
+  *
+  * The rule: [[cache]] records a pin in the innermost scope open on
+  * the calling thread, and only when the CacheManager held no entry for
+  * the plan before the call. A scope never releases an entry that outer
+  * code created (a query's own pin, or one another build shares through
+  * plan-matching). Outside any scope `cache` is a plain `.cache()`.
+  * Pins are released in reverse creation order: `unpersist` re-plans
+  * the cached frames that depend on the one it drops, and a later pin
+  * is often built on an earlier one.
+  */
+object Pins {
+
+  private val scopes = new ThreadLocal[List[scala.collection.mutable.ArrayBuffer[DataFrame]]] {
+    override def initialValue(): List[scala.collection.mutable.ArrayBuffer[DataFrame]] = Nil
+  }
+
+  /** Caches `df`; inside a scope the scope owns the pin unless the plan
+    * was already cached.
+    */
+  def cache(df: DataFrame): DataFrame = {
+    val owned = df.storageLevel == StorageLevel.NONE
+    df.cache()
+    if (owned) scopes.get.headOption.foreach(_ += df)
+    df
+  }
+
+  /** Runs `body` in a new scope, then releases the pins it recorded,
+    * newest first. `body` must leave nothing lazy that reads them.
+    */
+  private[warehouse] def scoped[T](body: => T): T = {
+    val pins = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    scopes.set(pins :: scopes.get)
+    try body
+    finally {
+      scopes.set(scopes.get.tail)
+      pins.reverseIterator.foreach(_.unpersist(blocking = false))
+    }
   }
 }

@@ -38,12 +38,20 @@ object PipelineQueries {
     * (round-15; deterministic, so consumers are bit-identical).
     */
   private def mNgramPairs(s: SparkSession, dir: String): DataFrame =
-    Materialized.of(s, dir, "ngram_pairs")(
-      Dedup.ngramJaccardPairs(docs(s, dir).cache()))
+    Materialized.of(s, dir, "ngram_pairs")(Dedup.ngramJaccardPairs(docs(s, dir)))
 
   private def mClusters(s: SparkSession, dir: String): DataFrame =
     Materialized.of(s, dir, "ngram_cc")(
       Dedup.connectedComponents(mNgramPairs(s, dir)))
+
+  /** The full per-document quality gate (every signal column) — feeds
+    * q100 (the gate itself), q133 (the funnel) and q146 (the decision
+    * table). The four signal subtrees each scan the corpus, so the
+    * build pins it; the pin is released once the gate is checkpointed.
+    */
+  private def mQualityGate(s: SparkSession, dir: String): DataFrame =
+    Materialized.of(s, dir, "quality_gate")(
+      TextAnalysis.qualityGate(Pins.cache(docs(s, dir))))
 
   /** Substring-removal census (the Lee et al. 2022 cleaning pass) —
     * feeds q294 (the per-doc list), q308 (the dataset card's
@@ -711,10 +719,7 @@ object PipelineQueries {
 
   /** q100: the composed quality gate over every text signal family. */
   val qualityGate: Q = (s, dir) =>
-    // the gate composes four docs-scanning signal subtrees — cache the
-    // corpus frame so each reads columnar memory, not parquet (the
-    // operator's own scale note; q133/q146 already pass a cached frame)
-    TextAnalysis.qualityGate(docs(s, dir).cache()).orderBy("doc_id")
+    mQualityGate(s, dir).orderBy("doc_id")
 
   /** q98: character-entropy degenerate-text detector. */
   val entropy: Q = (s, dir) =>
@@ -1630,26 +1635,9 @@ object PipelineQueries {
     */
   val dedupFunnel: Q = (s, dir) => {
     import graft.functions.Text
-    // the funnel composes SEVEN docs-scanning subtrees (pair gen, two
-    // canonical-keep joins, four quality signals); cache the corpus
-    // frame once so each subtree reads columnar memory, not parquet
-    val d = docs(s, dir).cache()
-    // The two funnel branches are independent, but canonicalKeep runs
-    // EAGER jobs at plan-build time (the connected-components solve) —
-    // composed naively, the quality-gate subtrees would wait out that
-    // barrier and only start with the final action. Materializing the
-    // gate on a second scheduler thread overlaps the branches: the
-    // FIFO scheduler interleaves both job sets across the executor
-    // cores (same wall-clock shape a multi-tenant production session
-    // gets for free).
-    val qual = TextAnalysis.qualityGate(d)
-      .select(col("doc_id"), col("pass_quality")).cache()
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.ExecutionContext.Implicits.global
-    import scala.concurrent.duration.Duration
-    val gateWarm = Future(qual.count())
+    val d = docs(s, dir)
+    val qual = mQualityGate(s, dir).select(col("doc_id"), col("pass_quality"))
     val kept = Dedup.canonicalKeepFrom(d, mClusters(s, dir)).select(col("doc_id"), col("keep"))
-    Await.result(gateWarm, Duration.Inf)
     d.select(col("doc_id"), size(Text.words(col("text"))).as("toks"))
       .join(kept, "doc_id")
       .join(qual, "doc_id")
@@ -2577,19 +2565,11 @@ object PipelineQueries {
     * document: is it in the training set, and if not, which stage cut
     * it. q133 reports the funnel totals; this is the full decision
     * TABLE (auditable per document, joinable back to the corpus).
-    * The same overlap trick as q133 hides the quality-gate evaluation
-    * inside canonicalKeep's eager connected-components barrier.
     */
   val curationDecisions: Q = (s, dir) => {
-    val d = docs(s, dir).cache()
-    val qual = TextAnalysis.qualityGate(d)
-      .select(col("doc_id"), col("pass_quality")).cache()
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.ExecutionContext.Implicits.global
-    import scala.concurrent.duration.Duration
-    val gateWarm = Future(qual.count())
+    val d = docs(s, dir)
+    val qual = mQualityGate(s, dir).select(col("doc_id"), col("pass_quality"))
     val kept = Dedup.canonicalKeepFrom(d, mClusters(s, dir)).select(col("doc_id"), col("keep"))
-    Await.result(gateWarm, Duration.Inf)
     Sampling.withSplit(d.select(col("doc_id")), "doc_id")
       .join(kept, "doc_id")
       .join(qual, "doc_id")
